@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, DoubleType, LongType}
 
+import graft.core.Materialize
+
 /** Event-log analytics: cohort retention and ordered conversion funnels —
   * the product-analytics queries a training-data pipeline's telemetry
   * side runs at the same scale as the corpus side.
@@ -545,8 +547,8 @@ object Analytics {
     * time-bucketed series where T is bounded by span, not data volume. */
   def mannKendall(series: DataFrame, group: String, order: String,
       value: String): DataFrame = {
-    val hc = series.select(col(group).as("g"), col(order).as("o"),
-      col(value).as("x")).localCheckpoint()
+    val hc = Materialize.once(series.select(col(group).as("g"),
+      col(order).as("o"), col(value).as("x")))
     val s = hc.as("a").join(hc.as("b"),
         col("a.g") === col("b.g") && col("a.o") < col("b.o"))
       .select(col("a.g").as("g"),
@@ -581,58 +583,64 @@ object Analytics {
     * k = (m+1) div 2 and (m+2) div 2 under a total (slope, o_i, o_j)
     * order, median = (low + high)/2.0 — exact when m is odd because
     * (a + a)/2 = a in IEEE. Pair space is per-group O(T²) over the
-    * order axis, bounded by span like [[mannKendall]]. */
+    * order axis, bounded by span like [[mannKendall]].
+    *
+    * EAGER: the pair space is built, ranked and reduced at CALL time,
+    * even if the caller never runs the returned frame, and the ≤ 2
+    * median rows per group are collected to the driver (driver memory
+    * grows with the GROUP count). Every intermediate it stored is freed
+    * before it returns; the result is a local relation. */
   def theilSen(series: DataFrame, group: String, order: String,
       value: String): DataFrame = {
-    val hc = series.select(col(group).as("g"), col(order).as("o"),
-      col(value).as("x")).localCheckpoint()
-    // Median = order STATISTIC of the pairwise-slope multiset: ranks
-    // (m+1) div 2 and (m+2) div 2 select slope VALUES only — the
-    // (oi, oj) provenance of a selected pair never reaches the output.
-    // So duplicate slope values collapse BEFORE any exchange: one
-    // map-side-partial aggregation to (g, slope, multiplicity) — on an
-    // hourly-count series most pairs repeat few distinct ratios
-    // (Δx/Δo over small integer deltas; r13 measured 7.9M pairs → 47k
-    // distinct (g, slope) runs at sf0.1) — then a weighted global
-    // prefix sum in (g, slope) order
-    // ([[graft.ops.GlobalOrder.prefixSummedKept]]) gives each run its
-    // last rank `cw` in the expanded multiset. The exchanges carry the
-    // distinct runs, not the O(T² per group) pair space (guide §2.3
-    // "aggregate before you shuffle"); rank-k selection is the row
-    // with cw − w < k ≤ cw. Value-identical to numbering every pair:
-    // tied slopes are interchangeable for value selection, and slope
-    // here is never NaN (oj > oi) nor −0.0 (integer numerator).
-    val slopes = hc.as("a").join(hc.as("b"),
-        col("a.g") === col("b.g") && col("a.o") < col("b.o"))
-      .select(col("a.g").as("g"),
-        ((col("b.x") - col("a.x")).cast(DoubleType) /
-          (col("b.o") - col("a.o")).cast(DoubleType)).as("slope"))
-      .groupBy("g", "slope").agg(count(lit(1)).as("w"))
     val spark = series.sparkSession
-    val p = spark.sessionState.conf.numShufflePartitions
-    val (summed, handle) = graft.ops.GlobalOrder.prefixSummedKept(
-      slopes, "w", "cw", p, col("g"), col("slope"))
-    val targets = summed.groupBy("g")
-      .agg(sum(col("w")).as("m"), min(col("cw") - col("w")).as("off"))
-      .select(col("g"), col("m"),
-        (col("off") + expr("(m + 1) div 2")).as("t1"),
-        (col("off") + expr("(m + 2) div 2")).as("t2"))
-    val medians = summed.join(broadcast(targets), Seq("g"))
-      .filter((col("cw") - col("w") < col("t1") && col("t1") <= col("cw")) ||
-        (col("cw") - col("w") < col("t2") && col("t2") <= col("cw")))
-      .select(col("g"), col("m"), col("slope"))
-    // Eagerly pull the ≤2 median rows per group (bounded by GROUP count —
-    // the documented metadata-collect exception), then FREE the O(T²)
-    // pairwise-slope checkpoints: the numbered frame GlobalOrder holds
-    // and the input snapshot. They are the largest intermediates in the
-    // op, and left to the ContextCleaner they pin block-manager storage
-    // for the session's life (r12 advice). The returned frame is a local
-    // relation — nothing downstream can re-read the freed lineage.
-    val rows = medians.collect().toIndexedSeq
-    graft.ext.Graph.freeCheckpoint(handle)
-    graft.ext.Graph.freeCheckpoint(hc)
+    val (schema, rows) = Materialize.scope(spark) {
+      val hc = Materialize.once(series.select(col(group).as("g"),
+        col(order).as("o"), col(value).as("x")))
+      // Median = order STATISTIC of the pairwise-slope multiset: ranks
+      // (m+1) div 2 and (m+2) div 2 select slope VALUES only — the
+      // (oi, oj) provenance of a selected pair never reaches the output.
+      // So duplicate slope values collapse BEFORE any exchange: one
+      // map-side-partial aggregation to (g, slope, multiplicity) — on an
+      // hourly-count series most pairs repeat few distinct ratios
+      // (Δx/Δo over small integer deltas; r13 measured 7.9M pairs → 47k
+      // distinct (g, slope) runs at sf0.1) — then a weighted global
+      // prefix sum in (g, slope) order
+      // ([[graft.ops.GlobalOrder.prefixSummed]]) gives each run its
+      // last rank `cw` in the expanded multiset. The exchanges carry the
+      // distinct runs, not the O(T² per group) pair space (guide §2.3
+      // "aggregate before you shuffle"); rank-k selection is the row
+      // with cw − w < k ≤ cw. Value-identical to numbering every pair:
+      // tied slopes are interchangeable for value selection, and slope
+      // here is never NaN (oj > oi) nor −0.0 (integer numerator).
+      val slopes = hc.as("a").join(hc.as("b"),
+          col("a.g") === col("b.g") && col("a.o") < col("b.o"))
+        .select(col("a.g").as("g"),
+          ((col("b.x") - col("a.x")).cast(DoubleType) /
+            (col("b.o") - col("a.o")).cast(DoubleType)).as("slope"))
+        .groupBy("g", "slope").agg(count(lit(1)).as("w"))
+      val p = spark.sessionState.conf.numShufflePartitions
+      val summed = graft.ops.GlobalOrder.prefixSummed(
+        slopes, "w", "cw", p, col("g"), col("slope"))
+      val targets = summed.groupBy("g")
+        .agg(sum(col("w")).as("m"), min(col("cw") - col("w")).as("off"))
+        .select(col("g"), col("m"),
+          (col("off") + expr("(m + 1) div 2")).as("t1"),
+          (col("off") + expr("(m + 2) div 2")).as("t2"))
+      val medians = summed.join(broadcast(targets), Seq("g"))
+        .filter((col("cw") - col("w") < col("t1") && col("t1") <= col("cw")) ||
+          (col("cw") - col("w") < col("t2") && col("t2") <= col("cw")))
+        .select(col("g"), col("m"), col("slope"))
+      // Eagerly pull the ≤2 median rows per group (bounded by GROUP count —
+      // the documented metadata-collect exception); the scope then frees
+      // the O(T²) pairwise-slope run table GlobalOrder stored and the input
+      // snapshot — the largest intermediates in the op, which left to the
+      // ContextCleaner pin block-manager storage for the session's life
+      // (r12 advice). The returned frame is a local relation — nothing
+      // downstream can re-read the freed lineage.
+      (medians.schema, medians.collect().toIndexedSeq)
+    }
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, medians.schema)
+    spark.createDataFrame(rows.asJava, schema)
       .groupBy("g")
       .agg(max(col("m")).as("n_pairs"),
         ((min(col("slope")) + max(col("slope"))) / lit(2.0)).as("slope_med"))

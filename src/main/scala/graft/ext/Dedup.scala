@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Deduplication operators for large-scale training-data curation — the
   * north-star surface beyond the reference pipeline (its only dedup is
   * `dropDuplicates`, `b2s_company_house.py:70`).
@@ -475,9 +477,10 @@ object Dedup {
     * size. Both terms only ever LOWER a label toward the component min,
     * so the fixpoint (label = min id in component) and its determinism
     * are unchanged; each round truncates lineage with an eager
-    * localCheckpoint so plan size stays O(1) in the iteration count.
+    * [[Materialize.once]] so plan size stays O(1) in the
+    * iteration count.
     * The fixpoint is detected by counting the round's changed rows
-    * (`next.filter(__changed).count()` over the already-checkpointed
+    * (`next.filter(__changed).count()` over the already-materialized
     * result — no extra join); the same per-round count drives the
     * pointer-jump gate, which engages only while the changed count
     * fails to halve round-over-round. maxIters is a SAFETY VALVE, not a
@@ -495,30 +498,30 @@ object Dedup {
     // part of the whole query, and exchange reuse does not unify the
     // two branches (r13 StageProf: both d_dup_clusters and
     // x_curation_cc ran the 5000-doc pair pipeline twice). The pair
-    // list itself is tiny (near-dup survivors), so the checkpoint is
+    // list itself is tiny (near-dup survivors), so materializing it is
     // cheap; freed after the mirrored edge table is materialized.
-    val pr = pairs.select(col(a).as("src"), col(b).as("dst")).localCheckpoint()
+    val pr = Materialize.once(pairs.select(col(a).as("src"), col(b).as("dst")))
     // Post-distinct, re-key the layout on src — the loop's probe key.
-    // localCheckpoint preserves the partitioning, and every round's label
+    // Materializing preserves the partitioning, and every round's label
     // table is hash-partitioned on the node key by its own aggregation,
     // so both per-round joins plan exchange-free; the per-node min merge
     // is each round's only shuffle. Explicit partition count keeps AQE
     // from coalescing the layout away from the state side's.
     val p0 = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val (edges, p) = Graph.loopSized(Graph.checkpointKeyed(
+    val (edges, p) = Graph.loopSized(Materialize.once(
       pr.union(pr.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().repartition(p0, col("src")), "src"), "src")
-    Graph.freeCheckpoint(pr)
+        .distinct().repartition(p0, col("src")), Some("src")), "src")
+    Materialize.free(pr)
     Graph.withShufflePartitions(pairs.sparkSession, p) {
     // Seed with min(self, neighbors) — the first propagation round for
     // free out of the same edge aggregation that defines the node set.
-    var ckpt = Graph.checkpointKeyed(edges.groupBy(col("dst").as("node"))
-      .agg(least(col("dst"), min(col("src"))).as("label")), "node")
-    var labels = ckpt
+    var held = Materialize.once(edges.groupBy(col("dst").as("node"))
+      .agg(least(col("dst"), min(col("src"))).as("label")), Some("node"))
+    var labels = held
     var converged = false
     var i = 0
     // Per-round changed-row counts (the convergence scan below yields the
-    // count for free — it reads the already-checkpointed blocks, no extra
+    // count for free — it reads the already-materialized blocks, no extra
     // shuffle). Two-round history drives the pointer-jump gate.
     var changedPrev = Long.MaxValue
     var changedPrev2 = Long.MaxValue
@@ -554,36 +557,32 @@ object Dedup {
                 coalesce(col("jmin"), col("label"))).as("cand"))
         }
       // The changed flag rides along in the propagation pass itself, so
-      // convergence detection is a scan of the checkpointed result — no
+      // convergence detection is a scan of the materialized result — no
       // extra join per round.
-      val next = Graph.checkpointKeyed(
+      val next = Materialize.once(
         jumped.select(col("node"),
           least(col("label"), col("cand")).as("label"),
           (col("cand") < col("label")).as("__changed")),
-        "node")
+        Some("node"))
       val changed = next.filter(col("__changed")).count()
       converged = changed == 0L
       changedPrev2 = changedPrev
       changedPrev = changed
-      // next is eagerly materialized, so the previous round's checkpoint
-      // blocks are dead weight — free them now instead of pinning
+      // next is eagerly materialized, so the previous round's blocks are
+      // dead weight — free them now instead of pinning
       // O(iters × |labels|) block-manager memory for the session's life
       // (left to the ContextCleaner they survive until a driver GC, which
       // a long bench run may never trigger under memory pressure).
-      freeCheckpoint(ckpt)
-      ckpt = next
+      Materialize.free(held)
+      held = next
       labels = next.drop("__changed")
       i += 1
     }
     require(converged, s"duplicateClusters did not converge in $maxIters iterations")
-    freeCheckpoint(edges)
+    Materialize.free(edges)
     labels
     }
   }
-
-  /** Free a round's checkpoint backing (blocks, and in reliable mode the
-    * round's checkpoint files) — see [[Graph.freeCheckpoint]]. */
-  private def freeCheckpoint(df: DataFrame): Unit = Graph.freeCheckpoint(df)
 
   /** MinHash signatures: doc_id, sig array<long> of k permuted minima.
     * Staged projections (shingles → hs → sig) keep each intermediate

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Distributed graph analytics over edge tables — the operator class the
   * dedup/curation pipelines need beyond connected components
   * ([[Dedup.dupClusters]]): triangle counting measures how CLIQUE-like a
@@ -124,30 +126,33 @@ object Graph {
     * hierarchies, SCD lineage) in a bounded number of shuffles.
     * Each round is one self-join keyed on the current ancestor.
     *
-    * EAGER: this function runs Spark jobs at CALL time (each round's
-    * localCheckpoint materializes, and the convergence probe is an
-    * action) — it returns a materialized result, not a lazy plan.
-    * Lineage truncation is what makes 8 self-join rounds cost seconds
-    * instead of minutes, and the checkpoint blocks it pins are exactly
-    * the rounds' results, so the eagerness is the point, not a leak. */
+    * EAGER: this function runs Spark jobs at CALL time (each round is
+    * materialized with [[Materialize.once]], and the convergence probe
+    * is an action). Lineage truncation is what makes 8 self-join rounds
+    * cost seconds instead of minutes. Every superseded round and the
+    * input snapshot are freed before it returns; the result reads the
+    * final round's handle, which stays live until the caller frees it
+    * or an enclosing [[Materialize.scope]] exits. */
   def rootsAndDepths(parents0: DataFrame, rounds: Int = 8,
                      verifyConverged: Boolean = true): DataFrame = {
     // Each round joins the state with ITSELF: without materialization the
     // lazy plan doubles per round (2^rounds copies of the upstream edge
-    // build — measured 123s vs 2s at sf0.1). localCheckpoint per round
+    // build — measured 123s vs 2s at sf0.1). Materializing each round
     // truncates the lineage, same as the dup-clusters iteration.
-    val parents = ckpt(parents0)
+    val parents = Materialize.once(parents0)
     // Adaptive round layout (guide §2.2): each round's self-join executes
     // eagerly inside the scope, so its exchanges size to the measured
     // pointer-table bytes instead of the session constant.
-    val pLoop = loopPartitions(parents0.sparkSession, materializedBytes(parents))
+    val pLoop = loopPartitions(parents0.sparkSession, Materialize.measuredBytes(parents))
     var s = parents.select(col("u"), col("p").as("anc"),
       when(col("p") === col("u"), 0L).otherwise(1L).as("d"))
     withShufflePartitions(parents0.sparkSession, pLoop) {
       for (_ <- 1 to rounds) {
         val j = s.select(col("u").as("ju"), col("anc").as("janc"), col("d").as("jd"))
-        s = ckpt(s.join(j, s("anc") === j("ju"))
+        val next = Materialize.once(s.join(j, s("anc") === j("ju"))
           .select(s("u"), col("janc").as("anc"), (s("d") + col("jd")).as("d")))
+        Materialize.free(s)
+        s = next
       }
     }
     if (verifyConverged) {
@@ -159,6 +164,7 @@ object Graph {
       require(unresolved.limit(1).count() == 0,
         s"rootsAndDepths: a chain exceeds depth 2^$rounds — increase rounds")
     }
+    Materialize.free(parents)
     s.select(col("u"), col("anc").as("root"), col("d").as("depth"))
   }
 
@@ -172,7 +178,7 @@ object Graph {
     * so there are no dangling-mass corrections.
     *
     * Scale design: the degree-annotated edge table is hash-partitioned on
-    * the source key ONCE and localCheckpoint'd — checkpoint preserves the
+    * the source key ONCE and materialized — materializing preserves the
     * physical plan's output partitioning, and each round's rank aggregate
     * comes out hash-partitioned on the same key with the same partition
     * count, so the per-round message join is EXCHANGE-FREE on both sides
@@ -180,10 +186,11 @@ object Graph {
     * message min/sum aggregation itself — map-side partial aggregation
     * first — so iteration cost is rounds × (map-side join + one reduced
     * exchange), never rounds × edge-list shuffle. State strictly O(V) +
-    * O(E), nothing on the driver. EAGER: the edge/degree checkpoints run
-    * jobs at call time. Lineage across rounds stays lazy (linear in
-    * `iters`; callers running many iterations should checkpoint every
-    * ~10). Damping uses the exact split identity
+    * O(E), nothing on the driver. EAGER: the edge/degree materializations
+    * run jobs at call time; the returned frame reads the degree and
+    * edge handles, which stay live until freed or their scope exits.
+    * Lineage across rounds stays lazy (linear in `iters`; callers
+    * running many iterations should materialize every ~10). Damping uses the exact split identity
     * ⌊85s/100⌋ = 85·⌊s/100⌋ + ⌊85·(s mod 100)/100⌋ so no intermediate
     * exceeds the running sum itself; total mass is ≤ V·scale, so pick
     * `scale` such that V·scale stays inside Long (default 1e12 covers
@@ -193,13 +200,13 @@ object Graph {
                scale: Long = 1000000000000L): DataFrame = {
     // One evaluation of the (possibly expensive) edge derivation: deg and
     // undD below would otherwise each replay it.
-    val e = ckpt(edges.select(col("a"), col("b")))
+    val e = Materialize.once(edges.select(col("a"), col("b")))
     val und = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
-    // deg is consumed twice (undD build + rank init) — checkpoint it too;
+    // deg is consumed twice (undD build + rank init) — materialize it too;
     // its groupBy leaves it hash-partitioned on u, which the rank-init
     // projection inherits, so round 1's join is already co-partitioned.
-    val deg = checkpointKeyed(und.groupBy("u").agg(count(lit(1)).as("deg")), "u")
+    val deg = Materialize.once(und.groupBy("u").agg(count(lit(1)).as("deg")), Some("u"))
     // Explicit repartition, not the join's own layout: when deg is small
     // the join plans BROADCAST and its output partitioning is the
     // (unpartitioned) streamed side — scale-dependent. The repartition
@@ -211,9 +218,9 @@ object Graph {
     // one side per round. The eager loops (BFS/SSSP/k-core/LPA/CC) run
     // their rounds inside the scope and do size adaptively.
     val p = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val undD = checkpointKeyed(
-      und.join(deg, Seq("u")).repartition(p, col("u")), "u")
-    freeCheckpoint(e)
+    val undD = Materialize.once(
+      und.join(deg, Seq("u")).repartition(p, col("u")), Some("u"))
+    Materialize.free(e)
     var pr = deg.select(col("u"), lit(scale).as("pr"))
     val base = 15L * scale / 100 // (1 - d) exactly, scale % 100 == 0
     for (_ <- 1 to iters) {
@@ -234,7 +241,7 @@ object Graph {
     * features, blast-radius queries), not full-graph SSSP.
     *
     * Scale design: the undirected edge table is hash-partitioned on the
-    * source key once and localCheckpoint'd (checkpoint preserves the
+    * source key once and materialized (materializing preserves the
     * partitioning), and each round's min-merge aggregate leaves the
     * distance table hash-partitioned on the vertex key with the same
     * partition count — so the per-round frontier join is exchange-free
@@ -242,9 +249,9 @@ object Graph {
     * itself (map-side partial min first). State strictly O(reached
     * vertices), nothing on the driver. Fixed `rounds` (not
     * converge-probe) keeps the round count — and therefore the oracle —
-    * deterministic. localCheckpoint per round truncates the exponential
-    * self-referencing lineage; freed eagerly like the dup-clusters loop.
-    * EAGER: runs jobs at call time.
+    * deterministic. Materializing each round truncates the exponential
+    * self-referencing lineage; superseded rounds are freed like the
+    * dup-clusters loop. EAGER: runs jobs at call time.
     *
     * All-integer arithmetic (hop counts), so a DuckDB replay of the same
     * chained relaxations is bit-exact. */
@@ -255,16 +262,14 @@ object Graph {
       // Repartition, not trust: seeds are caller-shaped; one tiny O(seeds)
       // shuffle guarantees round 1 joins co-partitioned like every later
       // round.
-      var ckpt = checkpointKeyed(
-        seeds.select(col("v"), lit(0L).as("dist")).repartition(p, col("v")), "v")
-      var dist = ckpt
+      var dist = Materialize.once(
+        seeds.select(col("v"), lit(0L).as("dist")).repartition(p, col("v")), Some("v"))
       for (_ <- 1 to rounds) {
-        val next = checkpointKeyed(bfsRound(dist, und), "v")
-        freeCheckpoint(ckpt)
-        ckpt = next
+        val next = Materialize.once(bfsRound(dist, und), Some("v"))
+        Materialize.free(dist)
         dist = next
       }
-      freeCheckpoint(und)
+      Materialize.free(und)
       dist
     }
   }
@@ -281,8 +286,8 @@ object Graph {
   }
 
   /** Undirected (u, v [, extra…]) edge table hash-partitioned on u with
-    * the session shuffle-partition count and localCheckpoint'd —
-    * checkpoint preserves the partitioning, so every later join keyed on
+    * the session shuffle-partition count and materialized — materializing
+    * preserves the partitioning, so every later join keyed on
     * u (or co-partitioned state keyed the same way) plans exchange-free
     * against it. The explicit partition count keeps AQE from coalescing
     * the layout out from under the loop's co-partitioning contract. */
@@ -291,29 +296,13 @@ object Graph {
     val p = edges.sparkSession.sessionState.conf.numShufflePartitions
     val cols = Seq(col("a").as("u"), col("b").as("v")) ++ extra.map(col)
     val rev = Seq(col("b").as("u"), col("a").as("v")) ++ extra.map(col)
-    checkpointKeyed(edges.select(cols: _*).unionAll(edges.select(rev: _*))
-      .repartition(p, col(key)), key)
+    Materialize.once(edges.select(cols: _*).unionAll(edges.select(rev: _*))
+      .repartition(p, col(key)), Some(key))
   }
-
-  /** MEASURED size of a checkpointed frame's backing blocks, from the
-    * block manager's storage info — the only honest size for a
-    * localCheckpoint'd frame (its `LogicalRDD.stats` carry the ORIGIN
-    * plan's estimate, which for join-heavy upstreams is the compounding
-    * product [[org.apache.spark.sql.graft.Bridge.capCheckpointStats]]
-    * exists to cap — useless for sizing). None when the frame is not a
-    * localCheckpoint (e.g. reliable-checkpoint file mode), in which case
-    * callers keep the session layout — the conservative default. */
-  private[graft] def materializedBytes(df: DataFrame): Option[Long] =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        df.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == lr.rdd.id).map(i => i.memSize + i.diskSize)
-      case _ => None
-    }
 
   /** Scale-adaptive partition count for the iterative loops (guide §2.2:
     * size reducers by BYTES, not a constant). The loops deliberately opt
-    * out of AQE inside [[checkpointKeyed]] so the recorded layout is
+    * out of AQE inside keyed [[Materialize.once]] so the recorded layout is
     * honest — which also opts them out of AQE's runtime coalescing, so a
     * 2 MB gate-scale graph used to run every round as
     * `spark.sql.shuffle.partitions` near-empty tasks while a 100 TB
@@ -334,7 +323,7 @@ object Graph {
         val target = math.max(1L, spark.conf.get(
           "spark.graft.loop.targetPartitionBytes", (32L << 20).toString).toLong)
         // Floor 2, not 1: repartition(1, key) plans SinglePartition, which
-        // loses the hash layout [[checkpointKeyed]] verifies.
+        // loses the hash layout keyed [[Materialize.once]] verifies.
         math.max(2, math.min(sessionP.toLong, (b + target - 1) / target)).toInt
       case None => sessionP
     }
@@ -344,7 +333,7 @@ object Graph {
     * iterative loop, so every round's aggregation plans the SAME count
     * as the loop's keyed edge table and the round joins stay
     * exchange-free at the adaptive size. Driver-side and scoped like
-    * [[checkpointKeyed]]'s AQE toggle; the engine's runners are
+    * keyed [[Materialize.once]]'s AQE toggle; the engine's runners are
     * single-threaded per session. */
   private[graft] def withShufflePartitions[T](spark: SparkSession, p: Int)
       (body: => T): T = {
@@ -354,18 +343,20 @@ object Graph {
     try body finally spark.conf.set(k, prev)
   }
 
-  /** Adopt the scale-adaptive layout for a materialized keyed loop input:
-    * measure its backing bytes, and when the session count over-splits it
-    * (and the table is small enough that one extra exchange is noise —
+  /** Adopt the scale-adaptive layout for a keyed loop input handle from
+    * [[Materialize.once]]: read its measured bytes, and when the session
+    * count over-splits it (and the table is small enough that one extra
+    * exchange is noise —
     * `spark.graft.loop.rekeyMaxBytes`, default 1 GiB), re-key it to the
     * derived count. Returns (frame, partition count). At 100 TB the
     * measured bytes exceed the bound and the input passes through
     * untouched — the re-key exchange is only ever paid by graphs small
-    * enough that it costs milliseconds. */
+    * enough that it costs milliseconds. An unmeasured handle keeps the
+    * session layout. */
   private[graft] def loopSized(df: DataFrame, key: String): (DataFrame, Int) = {
     val spark = df.sparkSession
     val sessionP = spark.sessionState.conf.numShufflePartitions
-    val bytes = materializedBytes(df)
+    val bytes = Materialize.measuredBytes(df)
     val p = loopPartitions(spark, bytes)
     // Clamp like targetPartitionBytes: a negative conf value silently
     // meant "never re-key"; pin that reading explicitly (r12 advice).
@@ -374,59 +365,11 @@ object Graph {
     if (p >= sessionP || bytes.forall(_ > rekeyMax)) (df, sessionP)
     else {
       val re = withShufflePartitions(spark, p) {
-        checkpointKeyed(df.repartition(p, col(key)), key)
+        Materialize.once(df.repartition(p, col(key)), Some(key))
       }
-      freeCheckpoint(df)
+      Materialize.free(df)
       (re, p)
     }
-  }
-
-  /** localCheckpoint that KEEPS the plan's hash partitioning on `key` —
-    * and VERIFIES it did. Two Spark 4.1 facts make the verification
-    * load-bearing:
-    *
-    *  1. Under AQE, `Dataset.localCheckpoint` records UnknownPartitioning
-    *     (the adaptive wrapper hides the final plan's layout) — which
-    *     silently re-inserts a per-round edge-list exchange into every
-    *     iterative loop here. So the checkpointed subtree is planned and
-    *     executed with AQE off: the recorded layout is then honest (the
-    *     exchange really is hash(key, numShufflePartitions), never
-    *     runtime-coalesced), while every consumer still plans adaptively.
-    *     The plans routed through this are shallow (a repartition, or one
-    *     join/agg over already-checkpointed inputs), so losing AQE for
-    *     their own execution costs nothing.
-    *  2. A projection that aliases one attribute N ways can pin the
-    *     preserved layout to an alias the loop never joins on — the
-    *     `require` below turns that silent O(E)-per-round regression
-    *     into an immediate failure naming the layout it actually got.
-    *
-    * Conf toggle is driver-side and scoped; the engine's runners are
-    * single-threaded per session. */
-  private[graft] def checkpointKeyed(df: DataFrame, key: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    val spark = df.sparkSession
-    val k = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(k)
-    spark.conf.set(k, "false")
-    val out =
-      try ckpt(df) finally spark.conf.set(k, prev)
-    val part = out.queryExecution.executedPlan.outputPartitioning
-    val ok = part match {
-      case h: HashPartitioning => h.expressions.nonEmpty &&
-        h.expressions.forall {
-          case a: Attribute => a.name == key
-          case _ => false
-        }
-      case _ => false
-    }
-    require(ok, s"checkpointKeyed: expected a preserved hash layout on " +
-      s"'$key', got $part — the consumer loop would re-shuffle O(E) per round")
-    // Cap the carried statistics: loop rounds otherwise compound the
-    // size estimate multiplicatively (Join stats = product of children)
-    // until driver-side BigInt arithmetic dominates the wall — see
-    // [[org.apache.spark.sql.graft.Bridge.capCheckpointStats]].
-    org.apache.spark.sql.graft.Bridge.capCheckpointStats(spark, out)
   }
 
   /** k-core peeling: `rounds` synchronous rounds of "delete every vertex
@@ -446,13 +389,13 @@ object Graph {
     * Scale design: each round recomputes remaining-degrees as one
     * edge-list join against the remaining-vertex set (two semi joins on
     * the endpoint keys) plus one keyed count — O(E) per round like the
-    * other iterative ops, state O(V), nothing on the driver; per-round
-    * localCheckpoint truncates the self-referencing lineage. EAGER: runs
+    * other iterative ops, state O(V), nothing on the driver; materializing
+    * each round truncates the self-referencing lineage. EAGER: runs
     * jobs at call time. */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int = 4): DataFrame = {
     // Partition on v — the key the per-round peel-decrement join probes
     // (nowPeeled arrives hash-partitioned on the same key via the deg
-    // checkpoint's preserved layout), so the edge list never re-shuffles
+    // handle's preserved layout), so the edge list never re-shuffles
     // inside the loop.
     val (und, pLoop) = loopSized(undBySrc(edges, key = "v"), "v")
     withShufflePartitions(edges.sparkSession, pLoop) {
@@ -461,28 +404,28 @@ object Graph {
     // pure FILTER on it, and each peeled vertex decrements its surviving
     // neighbors by one edge-list pass against the SMALL peel set — a
     // co-partitioned probe (und hash(v) ⋈ nowPeeled hash(v), both from
-    // preserved checkpoint layouts), never a per-round shuffle of the
+    // preserved handle layouts), never a per-round shuffle of the
     // full edge list. Correctness invariant: deg(u) counts u's edges to remaining
     // vertices, because every removed neighbor decremented u exactly once
     // in the round it peeled — edges to long-gone vertices never recount
     // since their endpoints left the deg table. The measured effect at
     // sf0.1: 4.7 s (two semi joins + recount per round) → the BFS-query
     // cost envelope (the edge build dominates).
-    var deg = checkpointKeyed(und.groupBy("u").agg(count(lit(1)).as("deg")), "u")
-    var peeled = ckpt(deg.filter(lit(false))
+    var deg = Materialize.once(und.groupBy("u").agg(count(lit(1)).as("deg")), Some("u"))
+    var peeled = Materialize.once(deg.filter(lit(false))
       .select(col("u"), lit(0L).as("peeled_round")))
     for (r <- 1 to rounds) {
       val nowPeeled = deg.filter(col("deg") < k).select("u")
-      val nextDeg = checkpointKeyed(kcoreNextDeg(deg, und, k), "u")
-      val nextPeeled = ckpt(peeled.unionAll(
+      val nextDeg = Materialize.once(kcoreNextDeg(deg, und, k), Some("u"))
+      val nextPeeled = Materialize.once(peeled.unionAll(
         nowPeeled.select(col("u"), lit(r.toLong).as("peeled_round"))))
-      freeCheckpoint(peeled); freeCheckpoint(deg)
+      Materialize.free(peeled); Materialize.free(deg)
       peeled = nextPeeled
       deg = nextDeg
     }
     val out = deg.select(col("u"), lit(null).cast("long").as("peeled_round"))
       .unionAll(peeled)
-    freeCheckpoint(und)
+    Materialize.free(und)
     out.select(col("u").as("v"), col("peeled_round"))
     }
   }
@@ -521,7 +464,7 @@ object Graph {
     * the two dense sides apart).
     *
     * Scale design: the edge table is hash-partitioned on the source key
-    * once and localCheckpoint'd, and both the label table and the
+    * once and materialized, and both the label table and the
     * per-round pick come out hash-partitioned on the vertex key — so the
     * message join AND the adopt join are exchange-free; the per-round
     * shuffles are the two aggregations only ((v, label) message counts,
@@ -529,25 +472,25 @@ object Graph {
     * The argmax is a struct-min AGGREGATE, not a rank window — plurality
     * with smallest-label tie-break is min over (−cnt, label), which keeps
     * map-side partial aggregation and drops the per-partition sort.
-    * Nothing on the driver; per-round localCheckpoint. EAGER: runs jobs
-    * at call time. Returns (v, community). */
+    * Nothing on the driver; each round materialized, superseded rounds
+    * freed. EAGER: runs jobs at call time. Returns (v, community). */
   def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     val (und, p) = loopSized(undBySrc(edges), "u")
     withShufflePartitions(edges.sparkSession, p) {
-      // Checkpoint the single-column node set (the aggregate pins the hash
+      // Materialize the single-column node set (the aggregate pins the hash
       // layout to `node`); the self-label projection stays LAZY — alias
       // tracking then lets round 1's message count even skip its exchange
       // (label ≡ node clusters (v, label) by itself).
-      var ckpt = checkpointKeyed(
-        und.select(col("u").as("node")).distinct(), "node")
-      var labels = ckpt.select(col("node"), col("node").as("label"))
+      var held = Materialize.once(
+        und.select(col("u").as("node")).distinct(), Some("node"))
+      var labels = held.select(col("node"), col("node").as("label"))
       for (_ <- 1 to rounds) {
-        val next = checkpointKeyed(lpRound(labels, und), "node")
-        freeCheckpoint(ckpt)
-        ckpt = next
+        val next = Materialize.once(lpRound(labels, und), Some("node"))
+        Materialize.free(held)
+        held = next
         labels = next
       }
-      freeCheckpoint(und)
+      Materialize.free(und)
       labels.select(col("node").as("v"), col("label").as("community"))
     }
   }
@@ -619,24 +562,22 @@ object Graph {
     * minimal-cost path's edge count.
     *
     * Same per-round shape as [[bfsDistances]]: edges hash-partitioned on
-    * the source key once (checkpoint preserves the layout), the cost
+    * the source key once (materializing preserves the layout), the cost
     * table arrives co-partitioned from its own min-merge — so the
     * relaxation join is exchange-free and the min-merge is the only
-    * per-round shuffle; per-round checkpoint, eager. */
+    * per-round shuffle; each round materialized, eager. */
   def ssspDistances(edges: DataFrame, seeds: DataFrame,
                     rounds: Int = 4): DataFrame = {
     val (und, p) = loopSized(undBySrc(edges, extra = Seq("w")), "u")
     withShufflePartitions(seeds.sparkSession, p) {
-      var ckpt = checkpointKeyed(
-        seeds.select(col("v"), lit(0L).as("cost")).repartition(p, col("v")), "v")
-      var cost = ckpt
+      var cost = Materialize.once(
+        seeds.select(col("v"), lit(0L).as("cost")).repartition(p, col("v")), Some("v"))
       for (_ <- 1 to rounds) {
-        val next = checkpointKeyed(ssspRound(cost, und), "v")
-        freeCheckpoint(ckpt)
-        ckpt = next
+        val next = Materialize.once(ssspRound(cost, und), Some("v"))
+        Materialize.free(cost)
         cost = next
       }
-      freeCheckpoint(und)
+      Materialize.free(und)
       cost
     }
   }
@@ -649,70 +590,4 @@ object Graph {
       .select(col("nbr").as("v"), (col("cost") + col("w")).as("cost"))
     cost.unionAll(prop).groupBy("v").agg(min(col("cost")).as("cost"))
   }
-
-  /** Eager lineage-truncating checkpoint for the iterative loops —
-    * LOCAL (block-manager) by default, RELIABLE (checkpoint-dir files)
-    * when `spark.graft.checkpoint.reliable=true`.
-    *
-    * The tradeoff, stated once: `localCheckpoint` stores the round's
-    * result as executor-local blocks and TRUNCATES LINEAGE — on a real
-    * cluster a single lost executor then kills the whole in-flight
-    * iterative job, because the truncated plan cannot recompute the lost
-    * blocks ("RDD was locally checkpointed … cannot be recomputed").
-    * That is fine on local[32] and fastest for benchmarks, fatal for a
-    * 1000-executor 100 TB run. Reliable mode routes each round through
-    * `Dataset.checkpoint()` to `spark.graft.checkpoint.dir` (set it to a
-    * durable FS — HDFS/S3 — on a cluster; defaults to a local scratch
-    * dir here), so a lost executor's partitions recompute by re-READING
-    * the checkpoint files. Cost: the eager reliable checkpoint runs the
-    * round's plan and writes it out once more (Spark re-runs the RDD to
-    * write checkpoint files) — measured 1.25–1.30× the whole-query wall
-    * on the iterative tail at sf0.1 (x_curation_cc 3.35→4.18 s,
-    * d_dup_clusters 2.46→3.19 s, x_pagerank 2.21→2.80 s; TimeQ
-    * min-of-2, matched host). The availability premium, paid only when
-    * asked for.
-    * Partitioning is preserved by both modes (LogicalRDD records the
-    * physical plan's layout); [[checkpointKeyed]] verifies it either way. */
-  private[graft] def ckpt(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (spark.conf.get("spark.graft.checkpoint.reliable", "false") == "true") {
-      val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(spark.conf.get(
-          "spark.graft.checkpoint.dir", "target/reliable-ckpt"))
-      df.checkpoint()
-    } else df.localCheckpoint()
-  }
-
-  /** Unpersist the block-manager storage behind a localCheckpoint'd frame
-    * (Dataset.unpersist only covers cache-manager entries, not checkpoint
-    * RDDs). For RELIABLE-checkpoint frames the backing is FILES in the
-    * checkpoint dir, so freeing additionally DELETES that round's
-    * checkpoint directory — without it a long iterative run (CC /
-    * PageRank / k-core, up to 100 rounds each, many queries per session)
-    * grows the durable FS unboundedly, because nothing else ever cleans
-    * reliable checkpoints (`spark.cleaner.referenceTracking
-    * .cleanCheckpoints` defaults to false, and even when on it only
-    * fires at driver GC). Freeing a frame DESTROYS its backing in both
-    * modes — call it only once a successor round (itself checkpointed to
-    * its own files/blocks) is materialized, exactly as the loops do.
-    * No-op for non-checkpoint plans. Public: callers that feed a
-    * checkpointed input into an iterative routine (whose internals
-    * eagerly re-checkpoint everything they keep) should free their input
-    * once the routine returns — in a long-lived session the blocks (or
-    * checkpoint files) otherwise accumulate until the context dies. */
-  def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-        lr.rdd.getCheckpointFile.foreach { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          val conf = df.sparkSession.sparkContext.hadoopConfiguration
-          // Best-effort: a failed delete only delays cleanup; it must
-          // never fail the query that finished the round.
-          try path.getFileSystem(conf).delete(path, true)
-          catch { case _: java.io.IOException => () }
-        }
-      case _ => ()
-    }
 }

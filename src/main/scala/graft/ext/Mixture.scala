@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.core.Materialize
+
 /** Corpus mixture construction: deterministic sampling of documents per
   * source up to a token budget — how a training run draws "x% web, y%
   * code, z% papers" from a curated lake without materializing a shuffle
@@ -239,10 +241,11 @@ object Mixture {
       val z = raw.agg(
         aggregate(sort_array(collect_list(struct(col(domainCol), col("raw")))),
           lit(0.0), (a, x) => a + x.getField("raw")).as("z"))
-      cur = raw.join(broadcast(z))
+      val next = Materialize.once(raw.join(broadcast(z))
         .withColumn("w", col("raw") / col("z"))
-        .drop("raw", "z")
-        .localCheckpoint()
+        .drop("raw", "z"))
+      Materialize.free(cur)
+      cur = next
     }
     cur
   }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.core.Materialize
+
 /** Model-evaluation and distribution-drift metrics over event logs — the
   * audits an ML platform runs beside every training-data refresh: ROC
   * AUC for "is this score still ranking the label", calibration bins for
@@ -489,8 +491,8 @@ object MlEval {
     * then 1-row broadcast crosses into the single-row readout. */
   def pairwiseClusterMetrics(items: DataFrame, predCol: String,
       goldCol: String): DataFrame = {
-    val cells = items.groupBy(col(predCol).as("pred"), col(goldCol).as("gold"))
-      .agg(count(lit(1)).as("n")).localCheckpoint()
+    val cells = Materialize.once(items.groupBy(col(predCol).as("pred"),
+      col(goldCol).as("gold")).agg(count(lit(1)).as("n")))
     val tp = cells.agg(sum(expr("n * (n - 1) div 2")).as("tp_pairs"))
     val pp = cells.groupBy("pred").agg(sum(col("n")).as("np"))
       .agg(sum(expr("np * (np - 1) div 2")).as("pred_pairs"))
@@ -527,8 +529,8 @@ object MlEval {
     * Gold keys are stringified so the two sides union on one type. */
   def bcubedPerCluster(items: DataFrame, predCol: String,
       goldCol: String): DataFrame = {
-    val cells = items.groupBy(col(predCol).as("pred"), col(goldCol).as("gold"))
-      .agg(count(lit(1)).as("n")).localCheckpoint()
+    val cells = Materialize.once(items.groupBy(col(predCol).as("pred"),
+      col(goldCol).as("gold")).agg(count(lit(1)).as("n")))
     def roll(side: String, key: org.apache.spark.sql.Column) =
       cells.groupBy(key.as("key"))
         .agg(sum(col("n")).as("sz"), sum(col("n") * col("n")).as("ssq"))
@@ -599,7 +601,7 @@ object MlEval {
     * kappa = (P̄ − P_e)/(1 − P_e). One scan + a |labels|-row marginal,
     * broadcast 1-row cross into the readout. */
   def fleissKappa3(labels: DataFrame): DataFrame = {
-    val lbl = labels.localCheckpoint()
+    val lbl = Materialize.once(labels)
     def eq(a: String, b: String) = when(col(a) === col(b), 1L).otherwise(0L)
     val tot = lbl
       .withColumn("ssq",

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.core.Materialize
+
 /** Similarity search over an embedding column (`array<float>`) — the
   * north-star ANN surface. Higher-order functions only (`zip_with` +
   * serial `aggregate` fold), no UDFs, so the dot product is a codegen'd
@@ -285,19 +287,19 @@ object Similarity {
     * trained quantizer under the DuckDB hash gate. Costs a collect_list
     * per (cell, dim) group; prefer the default beyond oracle scale.
     *
-    * Returns (c_id, c_emb, c_nrm) with unit-norm centroids, the shape
-    * [[ivfTopK]] consumes. */
+    * EAGER: every iteration is materialized at call time and the one
+    * before it freed. Returns (c_id, c_emb, c_nrm) with unit-norm
+    * centroids, the shape [[ivfTopK]] consumes, read from the final
+    * iteration's handle. */
   def trainCentroids(emb: DataFrame, nList: Int, iters: Int = 5,
                      exact: Boolean = false): DataFrame = {
     val nonzero = withNorm(emb).filter(col("nrm") > 0)
-    var centroids = nonzero.orderBy(col("vec_id")).limit(nList)
+    var centroids = Materialize.once(nonzero.orderBy(col("vec_id")).limit(nList)
       .select(col("vec_id").cast("long").as("c_id"),
-        transform(col("embedding"), x => x.cast(DoubleType) / col("nrm")).as("c_emb"))
-      .localCheckpoint()
-    val unit = nonzero
+        transform(col("embedding"), x => x.cast(DoubleType) / col("nrm")).as("c_emb")))
+    val unit = Materialize.once(nonzero
       .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast(DoubleType) / col("nrm")).as("u"))
-      .localCheckpoint()
+        transform(col("embedding"), x => x.cast(DoubleType) / col("nrm")).as("u")))
     for (_ <- 0 until iters) {
       // Aggregate argmax, not a rank window (see [[trainedAssignments]]):
       // u rides inside the min struct — (−cos, c_id) is unique per group,
@@ -326,8 +328,11 @@ object Similarity {
         .withColumn("n", sqrt(aggregate(col("s"), lit(0.0), (a, x) => a + x * x)))
         .filter(col("n") > 0)
         .select(col("c_id"), transform(col("s"), x => x / col("n")).as("c_emb"))
-      centroids = mean.localCheckpoint()
+      val next = Materialize.once(mean)
+      Materialize.free(centroids)
+      centroids = next
     }
+    Materialize.free(unit)
     centroids.withColumn("c_nrm", lit(1.0))
   }
 
@@ -657,9 +662,11 @@ object Similarity {
     * embarrassingly-parallel scan computing d²(x, new_center) and a
     * running `least` against the previous round's column (incremental:
     * rounds cost O(N·d) each, not O(N·k·d)), then a TakeOrdered(1)
-    * argmax. localCheckpoint per round keeps lineage flat (the
-    * iterative-loop house rule). Collects are k single rows — bounded
-    * driver traffic, like the BPE trainer's candidate horizon.
+    * argmax. Each round is materialized and the one before it freed,
+    * so lineage stays flat and at most two N-row rounds are live.
+    * Collects are k single rows — bounded driver traffic, like the BPE
+    * trainer's candidate horizon. EAGER: every round runs at call time
+    * and the result is a local relation; nothing it read stays stored.
     *
     * `points` must carry (vec_id: long, v: array<double>). Output: one
     * row per selection round — (round, vec_id, radius), radius null for
@@ -667,29 +674,33 @@ object Similarity {
   def kCenterSelect(points: DataFrame, k: Int): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    val pts = points.select(col("vec_id"), col("v")).localCheckpoint()
-    val seed = pts.orderBy(col("vec_id")).limit(1).collect().head
-    var centerVec: Seq[Double] = seed.getSeq[Double](1)
-    val picks = scala.collection.mutable.ListBuffer(
-      (0L, seed.getLong(0), Option.empty[Double]))
-    var cur: DataFrame = null
-    var exhausted = false
-    for (r <- 1 to k if !exhausted) {
-      val dNew = sqDist(col("v"), typedLit(centerVec))
-      cur = (if (r == 1) pts.withColumn("d", dNew)
-             else cur.withColumn("d", least(col("d"), dNew)))
-        .localCheckpoint()
-      val pick = cur.orderBy(col("d").desc, col("vec_id")).limit(1)
-        .select("vec_id", "d", "v").collect().head
-      // Early exit: max-min distance 0 means every point is already a
-      // chosen center (k ≥ #distinct points) — continuing would re-pick
-      // existing centers and emit duplicate vec_ids with radius 0.
-      if (pick.getDouble(1) == 0.0) exhausted = true
-      else {
-        picks += ((r.toLong, pick.getLong(0), Some(pick.getDouble(1))))
-        centerVec = pick.getSeq[Double](2)
+    Materialize.scope(spark) {
+      val pts = Materialize.once(points.select(col("vec_id"), col("v")))
+      val seed = pts.orderBy(col("vec_id")).limit(1).collect().head
+      var centerVec: Seq[Double] = seed.getSeq[Double](1)
+      val picks = scala.collection.mutable.ListBuffer(
+        (0L, seed.getLong(0), Option.empty[Double]))
+      var cur: DataFrame = null
+      var exhausted = false
+      for (r <- 1 to k if !exhausted) {
+        val dNew = sqDist(col("v"), typedLit(centerVec))
+        val next = Materialize.once(
+          if (r == 1) pts.withColumn("d", dNew)
+          else cur.withColumn("d", least(col("d"), dNew)))
+        if (cur != null) Materialize.free(cur)
+        cur = next
+        val pick = cur.orderBy(col("d").desc, col("vec_id")).limit(1)
+          .select("vec_id", "d", "v").collect().head
+        // Early exit: max-min distance 0 means every point is already a
+        // chosen center (k ≥ #distinct points) — continuing would re-pick
+        // existing centers and emit duplicate vec_ids with radius 0.
+        if (pick.getDouble(1) == 0.0) exhausted = true
+        else {
+          picks += ((r.toLong, pick.getLong(0), Some(pick.getDouble(1))))
+          centerVec = pick.getSeq[Double](2)
+        }
       }
+      picks.toSeq.toDF("round", "vec_id", "radius")
     }
-    picks.toSeq.toDF("round", "vec_id", "radius")
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.core.Materialize
+
 /** Portable text primitives for the training-data extension operators
   * (dedup, fingerprinting, text analysis — the north-star surface beyond
   * the reference pipeline, SURVEY.md §7.6).
@@ -191,8 +193,9 @@ object TextKit {
     *     metadata-scale, the same driver role as a centroid broadcast);
     *  3. rewrite — a pure per-word fold projection (no shuffle): the
     *     winning pair concatenates wherever it appears, leftmost-first.
-    * localCheckpoint per round cuts the growing lineage exactly like the
-    * Lloyd-iteration trainer in [[Similarity.trainCentroids]].
+    * Materializing each round (and freeing the one before) cuts the
+    * growing lineage exactly like the Lloyd-iteration trainer in
+    * [[Similarity.trainCentroids]].
     *
     * Returns the merge table (rank, lhs, rhs, cnt) — `k` rows. Fully
     * deterministic (integer counts, binary-ordered tiebreaks), so the
@@ -210,13 +213,12 @@ object TextKit {
   def bpeTrainState(docs: org.apache.spark.sql.DataFrame, k: Int,
       textCol: String = "text")
       : (Seq[(Long, String, String, Long)], org.apache.spark.sql.DataFrame) = {
-    var words = docs
+    var words = Materialize.once(docs
       .select(explode(split(lower(col(textCol)), "[^a-z]+")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("w"), transform(sequence(lit(1), length(col("w"))),
-        i => col("w").substr(i, lit(1))).as("syms"), col("freq"))
-      .localCheckpoint()
+        i => col("w").substr(i, lit(1))).as("syms"), col("freq")))
     // Batched rounds: ONE pair-count job collects the top-`horizon`
     // candidates, and the maximal SAFE batch of them applies in one
     // rewrite — k sequential driver round-trips (the r6-flagged latency
@@ -282,7 +284,7 @@ object TextKit {
       // fold: rules are symbol-disjoint, so at most one can fire at any
       // position — the when-chain order is immaterial and the result
       // equals applying the rules in separate sequential passes.
-      words = words.withColumn("syms",
+      val next = Materialize.once(words.withColumn("syms",
           when(size(col("syms")) > 1,
             aggregate(slice(col("syms"), lit(2), size(col("syms")) - 1),
               array(element_at(col("syms"), 1)),
@@ -294,8 +296,9 @@ object TextKit {
                       array(lit(lS + rS))))
                     .otherwise(els)
                 }))
-            .otherwise(col("syms")))
-        .localCheckpoint()
+            .otherwise(col("syms"))))
+      Materialize.free(words)
+      words = next
       applied.foreach { case (l, r, c) =>
         merges += (((merges.size + 1).toLong, l, r, c))
       }

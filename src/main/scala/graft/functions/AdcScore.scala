@@ -20,10 +20,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * Arithmetic replicated exactly: acc starts at 0.0 and adds
   * lut[s][codes[s]] for s = 0..m−1 in order (serial IEEE adds, same
   * order as the sequence fold). Null lut/codes → null like the HOF.
-  * A short lut, null element or out-of-range code cannot occur by
-  * construction (encode emits exactly m in-range codes, the LUT has m
-  * rows of nCode entries); where the HOF's element_at would ERROR on
-  * such inputs, this refuses with null.
+  * A lut and codes of different lengths, a null element or an
+  * out-of-range code cannot occur by construction (encode emits exactly
+  * m in-range codes, the LUT has m rows of nCode entries); on such
+  * inputs this returns null.
   */
 case class AdcScore(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -62,11 +62,12 @@ case class AdcScore(left: Expression, right: Expression) extends BinaryExpressio
 
 object AdcScore {
 
-  /** Shared eval/codegen kernel; null (boxed) on any lookup outside
-    * the table, mirroring the HOF fold's poisoned accumulator. */
+  /** Shared eval/codegen kernel; null (boxed) when the lengths differ or
+    * a lookup falls outside the table, mirroring the HOF fold's poisoned
+    * accumulator. */
   def compute(lut: ArrayData, codes: ArrayData, codesAreLong: Boolean): java.lang.Double = {
     val m = codes.numElements()
-    if (lut.numElements() < m) return null
+    if (lut.numElements() != m) return null
     var acc = 0.0
     var s = 0
     while (s < m) {

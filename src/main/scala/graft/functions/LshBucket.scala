@@ -25,7 +25,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * Null/edge semantics mirror the HOF forms bit-for-bit and make the
   * result provably NON-NULL (callers' coalesce(−1) never fires in
   * either form): nPlanes null or ≤ 0 → 0; null array, null element or
-  * null offset → every d_j is null → no bit set → 0. */
+  * null offset → every d_j is null → no bit set → 0. More than 63 planes
+  * is an error (a literal count fails analysis, a column value fails
+  * the task): bit j is `1L << j`, which wraps past the sign bit. */
 case class LshBucket(emb: Expression, nPlanes: Expression,
                      planeOffset: Expression) extends TernaryExpression {
 
@@ -36,7 +38,11 @@ case class LshBucket(emb: Expression, nPlanes: Expression,
   override def checkInputDataTypes(): TypeCheckResult = (emb.dataType,
       nPlanes.dataType, planeOffset.dataType) match {
     case (ArrayType(FloatType | DoubleType, _), IntegerType, IntegerType) =>
-      TypeCheckResult.TypeCheckSuccess
+      val fixed = if (nPlanes.foldable) Option(nPlanes.eval()) else None
+      if (fixed.exists(_.asInstanceOf[Int] > LshBucket.MaxPlanes))
+        TypeCheckResult.TypeCheckFailure(s"graft_lsh_bucket supports at most " +
+          s"${LshBucket.MaxPlanes} planes, got ${fixed.get}")
+      else TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"graft_lsh_bucket requires (array<float|double>, int, int), got $other")
   }
@@ -89,11 +95,16 @@ case class LshBucket(emb: Expression, nPlanes: Expression,
 
 object LshBucket {
 
+  /** Planes that fit a non-negative long bucket id. */
+  val MaxPlanes = 63
+
   /** Shared eval/codegen kernel — see the class doc for the exact
     * arithmetic contract. A null element zeroes every plane's sum in
     * the HOF form, so it returns 0 outright. */
   def compute(arr: ArrayData, nPlanes: Int, offset: Int,
               isFloat: Boolean): Long = {
+    require(nPlanes <= MaxPlanes,
+      s"graft_lsh_bucket supports at most $MaxPlanes planes, got $nPlanes")
     val n = arr.numElements()
     var i = 0
     while (i < n) { if (arr.isNullAt(i)) return 0L; i += 1 }

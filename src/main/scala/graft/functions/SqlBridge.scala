@@ -50,40 +50,49 @@ object Bridge {
     * `private[spark]`, hence bridged here). */
   def isStopped(spark: SparkSession): Boolean = spark.sparkContext.isStopped
 
-  /** Re-issue a localCheckpoint'd frame with its carried statistics
-    * CAPPED at Long.MaxValue bytes/rows.
-    *
-    * Why this exists: `Dataset.localCheckpoint` carries the origin
-    * plan's statistics onto the resulting LogicalRDD
-    * (`rewriteStatsAndConstraints`), and the size-only visitor estimates
-    * a Join as the PRODUCT of its children's sizeInBytes. An iterative
-    * loop that checkpoints every round therefore compounds the estimate
-    * multiplicatively — a round body with k references to the previous
-    * label table makes the carried BigInt's BIT LENGTH grow k^round, and
-    * driver-side stats estimation (BigInteger.multiply, Toom-Cook) comes
-    * to dominate wall time long before anything overflows. The round-10
-    * 100×-rows probe measured 57 CPU-minutes of the driver inside
-    * BigInteger.multiply on a 10-round connected-components loop.
-    *
-    * Above ~9 EB (Long.MaxValue bytes) an estimate carries no planning
-    * information — every threshold comparison already saturates — so the
-    * cap is plan-neutral while bounding every later stats computation on
-    * the loop's plans to O(1) bits. Constraints are preserved. Frames
-    * whose stats are already under the cap pass through untouched. */
-  def capCheckpointStats(spark: SparkSession, df: DataFrame): DataFrame = {
+  /** Re-issue a checkpointed frame's `LogicalRDD` with new statistics
+    * (see [[graft.core.Materialize]]). `Some(bytes)` becomes the only
+    * statistic, flagged `isRuntime` because it is a measurement, not an
+    * estimate. `None` keeps the carried origin estimate, capped at
+    * Long.MaxValue bytes and rows: above that every threshold comparison
+    * already saturates, and the cap stops a loop that checkpoints every
+    * round from compounding it into ever-longer BigInts. Layout and
+    * constraints are kept; any other plan passes through untouched. */
+  def withStoredStats(df: DataFrame, bytes: Option[Long]): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.Statistics
     import org.apache.spark.sql.execution.LogicalRDD
     analyzed(df) match {
       case lr: LogicalRDD =>
-        val s = lr.stats // cached — computed eagerly at checkpoint time
         val lim = BigInt(Long.MaxValue)
-        if (s.sizeInBytes <= lim && s.rowCount.forall(_ <= lim)) df
-        else ofRows(spark, lr.copy()(
-          spark.asInstanceOf[classic.SparkSession],
-          Some(Statistics(sizeInBytes = s.sizeInBytes.min(lim),
-            rowCount = s.rowCount.map(_.min(lim)))),
-          Some(lr.constraints)))
+        val stats = bytes match {
+          case Some(b) => Statistics(sizeInBytes = b, isRuntime = true)
+          case None => Statistics(sizeInBytes = lr.stats.sizeInBytes.min(lim),
+            rowCount = lr.stats.rowCount.map(_.min(lim)))
+        }
+        val spark = df.sparkSession
+        ofRows(spark, lr.copy()(spark.asInstanceOf[classic.SparkSession],
+          Some(stats), Some(lr.constraints)))
       case _ => df
     }
+  }
+
+  /** Memory + disk bytes the block managers hold for `rdd`, one replica
+    * per partition. Read synchronously from the block manager master,
+    * which every block put reports to before its task ends — unlike the
+    * app status store behind `SparkContext`'s RDD storage info, which the
+    * async listener bus fills later and may still miss blocks right
+    * after the job.
+    * None unless every partition has a block: a partial sum is not a
+    * size. (The master and its `StorageStatus` are `private[spark]`.) */
+  def storedBlockBytes(rdd: org.apache.spark.rdd.RDD[_]): Option[Long] = {
+    import org.apache.spark.storage.RDDBlockId
+    val perPartition = org.apache.spark.SparkEnv.get.blockManager.master
+      .getStorageStatus.toSeq
+      .flatMap(_.rddBlocks.collect {
+        case (RDDBlockId(id, part), st) if id == rdd.id => part -> (st.memSize + st.diskSize)
+      })
+      .groupMapReduce(_._1)(_._2)(math.max)
+    if (perPartition.size == rdd.partitions.length) Some(perPartition.values.sum)
+    else None
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.core.Materialize
+
 /** Contiguous global row numbering in a total key order — the scalable
   * form of `row_number() OVER (ORDER BY …)`, whose empty-PARTITION-BY
   * window Spark plans as a SINGLE-partition sort: one task receives the
@@ -22,11 +24,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * The assignment is IMPERATIVE per-partition logic (a running counter),
   * so pass 2 is `mapPartitionsWithIndex` — the genuine use-case for the
-  * RDD escape hatch. The input is localCheckpoint'd: both passes read
-  * the materialized sorted layout (without it pass 2 would recompute the
-  * upstream plan, and a recomputation is not even guaranteed to produce
-  * the same partition-internal order for tied keys). EAGER, and the
-  * returned frame holds that checkpoint — callers unpersist when done.
+  * RDD escape hatch. The sorted input is stored once with
+  * [[graft.core.Materialize.once]]: both passes read the materialized
+  * sorted layout (without it pass 2 would recompute the upstream plan,
+  * and a recomputation is not even guaranteed to produce the same
+  * partition-internal order for tied keys). EAGER, and the returned
+  * frame reads that handle — run the caller inside a
+  * [[graft.core.Materialize.scope]] to free it once the numbering has
+  * been consumed.
   *
   * Numbers are 1-based and CONTIGUOUS (1..N), independent of the chosen
   * partition count. They are deterministic iff `keys` is a total order
@@ -37,9 +42,9 @@ object GlobalOrder {
 
   def rowNumbered(df: DataFrame, outCol: String, numPartitions: Int,
                   keys: Column*): DataFrame =
-    rowNumberedKept(df, outCol, numPartitions, keys: _*)._1
+    offsetScan(df, None, outCol, numPartitions, keys)
 
-  /** Weighted twin of [[rowNumberedKept]]: rows carry a positive long
+  /** Weighted twin of [[rowNumbered]]: rows carry a positive long
     * weight (`weightCol`) standing for a RUN of identical keys, and
     * `outCol` receives the INCLUSIVE cumulative weight in global key
     * order — i.e. the run's last rank in the expanded multiset. A
@@ -48,63 +53,45 @@ object GlobalOrder {
     * the row where `outCol - weight < k <= outCol`, while the exchange
     * carries one row per distinct key instead of one per element
     * (guide §2.3: aggregate before you shuffle). Same two-pass
-    * partition-offset scheme, same checkpoint-handle contract. */
-  def prefixSummedKept(df: DataFrame, weightCol: String, outCol: String,
-                       numPartitions: Int, keys: Column*): (DataFrame, DataFrame) = {
-    require(keys.nonEmpty, "prefixSummed needs at least one ordering key")
-    val spark = df.sparkSession
-    val sorted = df.repartitionByRange(numPartitions, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .localCheckpoint()
-    val counts = sorted.groupBy(spark_partition_id().as("pid"))
-      .agg(sum(col(weightCol)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val nParts = (counts.keys.maxOption.getOrElse(-1) + 1) max numPartitions
-    val offsets = new Array[Long](nParts)
-    var acc = 0L
-    for (p <- offsets.indices) { offsets(p) = acc; acc += counts.getOrElse(p, 0L) }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val wIdx = sorted.schema.fieldIndex(weightCol)
-    val schema = StructType(sorted.schema.fields :+
-      StructField(outCol, LongType, nullable = false))
-    val rdd = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var c = bc.value(pid)
-      it.map { row => c += row.getLong(wIdx); Row.fromSeq(row.toSeq :+ c) }
-    }
-    (spark.createDataFrame(rdd, schema), sorted)
+    * partition-offset scheme, same handle contract. */
+  def prefixSummed(df: DataFrame, weightCol: String, outCol: String,
+                   numPartitions: Int, keys: Column*): DataFrame = {
+    val wType = df.schema(weightCol).dataType
+    require(wType == LongType,
+      s"prefixSummed needs a LongType weight column, '$weightCol' is ${wType.sql}")
+    offsetScan(df, Some(weightCol), outCol, numPartitions, keys)
   }
 
-  /** [[rowNumbered]] plus the checkpointed sorted frame backing it, so a
-    * caller that consumes the numbering EAGERLY can free the checkpoint
-    * (`graft.ext.Graph.freeCheckpoint(handle)`) instead of pinning the
-    * op's largest intermediate in block storage for the session's life.
-    * Free it only after every read of the numbered frame has executed —
-    * the numbering RDD reads the checkpoint and cannot be recomputed. */
-  def rowNumberedKept(df: DataFrame, outCol: String, numPartitions: Int,
-                      keys: Column*): (DataFrame, DataFrame) = {
-    require(keys.nonEmpty, "rowNumbered needs at least one ordering key")
+  /** Both passes. Each row adds its weight (1 without `weightCol`) to a
+    * running counter started at its partition's offset. */
+  private def offsetScan(df: DataFrame, weightCol: Option[String],
+      outCol: String, numPartitions: Int, keys: Seq[Column]): DataFrame = {
+    require(keys.nonEmpty, "GlobalOrder needs at least one ordering key")
     val spark = df.sparkSession
-    val sorted = df.repartitionByRange(numPartitions, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .localCheckpoint()
-    // pass 1: per-partition row counts → cumulative offsets. O(#parts)
+    val sorted = Materialize.once(df.repartitionByRange(numPartitions, keys: _*)
+      .sortWithinPartitions(keys: _*))
+    // pass 1: per-partition weight sums → cumulative offsets. O(#parts)
     // rows reach the driver — metadata, not data.
     val counts = sorted.groupBy(spark_partition_id().as("pid"))
-      .agg(count(lit(1)).as("n"))
+      .agg(sum(weightCol.fold(lit(1L))(col)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val nParts = (counts.keys.maxOption.getOrElse(-1) + 1) max numPartitions
     val offsets = new Array[Long](nParts)
     var acc = 0L
     for (p <- offsets.indices) { offsets(p) = acc; acc += counts.getOrElse(p, 0L) }
     val bc = spark.sparkContext.broadcast(offsets)
+    val wIdx = weightCol.fold(-1)(sorted.schema.fieldIndex)
     val schema = StructType(sorted.schema.fields :+
       StructField(outCol, LongType, nullable = false))
     // pass 2: running counter from the partition's offset, over the SAME
     // materialized partitions pass 1 counted.
     val rdd = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var i = bc.value(pid)
-      it.map { row => i += 1; Row.fromSeq(row.toSeq :+ i) }
+      var c = bc.value(pid)
+      it.map { row =>
+        c += (if (wIdx < 0) 1L else row.getLong(wIdx))
+        Row.fromSeq(row.toSeq :+ c)
+      }
     }
-    (spark.createDataFrame(rdd, schema), sorted)
+    spark.createDataFrame(rdd, schema)
   }
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Materialize
 import graft.ext.{Analytics, AsOf, Dedup, DuckSql, Graph, Mixture, MlEval, Multimodal, Par, RangeJoin, Similarity, TextKit}
 import graft.ops.{Bucketing, GlobalOrder, Skew}
 import graft.streaming.EventStreams
@@ -524,10 +525,9 @@ object Extensions {
     // ReuseExchange cannot unify with the shuffle-side subtree, so
     // without the barrier the synthesize+decode pass over the full
     // corpus ran TWICE (r13 StageProf: 2× 5000-row decode stages).
-    val sigs = Multimodal.imageHashes(media).toDF()
+    val sigs = Materialize.once(Multimodal.imageHashes(media).toDF()
       .groupBy(col("ahash_hi").as("hi"), col("ahash_lo").as("lo"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_docs"))
-      .localCheckpoint()
+      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_docs")))
     // band identity includes POSITION (posexplode ordinal): equal values
     // in different band slots are not a candidate signal. The full hash
     // rides along so the Hamming gate runs map-side on the raw band-join
@@ -900,8 +900,8 @@ object Extensions {
     // Materialize the ground truth once: each recallAtK branch reads
     // `exact` twice (semi-join probe + the per-query denominator), so
     // without the barrier the full brute-force scan-score-rank subtree
-    // ran SIX times (r13 StageProf). 100 rows — the checkpoint is free.
-    val exact = Similarity.bruteForceTopK(e, q, 5).localCheckpoint()
+    // ran SIX times (r13 StageProf). 100 rows — storing them is free.
+    val exact = Materialize.once(Similarity.bruteForceTopK(e, q, 5))
     Similarity.recallAtK(exact,
         Similarity.ivfTopK(e, q, nList = 10, nProbe = 2, k = 5), "ivf", 5)
       .unionByName(Similarity.recallAtK(exact,
@@ -2064,14 +2064,12 @@ object Extensions {
     // StageProf: four full passes over the dup universe). Materialize
     // the narrow id-pair lists once; at 100 TB they are O(dup pairs)
     // and O(N·w) two-long rows — the scale-safe thing to pin.
-    val truePairs = hashed.as("x").join(hashed.as("y"),
+    val truePairs = Materialize.once(hashed.as("x").join(hashed.as("y"),
         col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .localCheckpoint()
-    val cands = snmCandidates(
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")))
+    val cands = Materialize.once(snmCandidates(
       u.select(col("doc_id"), substring(col("text"), 1, 12).as("k")))
-      .select("a", "b")
-      .localCheckpoint()
+      .select("a", "b"))
     val nDocs = u.agg(count(lit(1)).as("n_docs"))
     val nTrue = truePairs.agg(count(lit(1)).as("n_true"))
     val nCand = cands.agg(count(lit(1)).as("n_cand"))
@@ -2110,8 +2108,8 @@ object Extensions {
     // One hashed fingerprint table read by both pair sides instead of
     // two full sha256 passes over the dup universe (the persisted-
     // fingerprint-table shape a deployment uses; O(N) narrow rows).
-    val hu = u.select(col("doc_id"), sha2(col("text"), 256).as("h"),
-      col("lang"), col("source"), col("n_chars")).localCheckpoint()
+    val hu = Materialize.once(u.select(col("doc_id"), sha2(col("text"), 256).as("h"),
+      col("lang"), col("source"), col("n_chars")))
     def side(p: String) = hu.select(col("doc_id").as(p),
       col("h").as(s"h$p"), col("lang").as(s"l$p"),
       col("source").as(s"s$p"), col("n_chars").as(s"c$p"))
@@ -2165,14 +2163,13 @@ object Extensions {
     def side(p: String) = u.select(col("doc_id").as(p),
       col("lang").as(s"l$p"), col("source").as(s"s$p"),
       col("n_chars").as(s"c$p"))
-    // ≤ 8 rows — checkpointed once, read by every round and the output
-    val pat = cands.join(side("a"), Seq("a")).join(side("b"), Seq("b"))
+    // ≤ 8 rows — materialized once, read by every round and the output
+    val pat = Materialize.once(cands.join(side("a"), Seq("a")).join(side("b"), Seq("b"))
       .select((col("la") === col("lb")).as("ag_lang"),
         (col("sa") === col("sb")).as("ag_source"),
         (abs(col("ca") - col("cb")) <= 5).as("ag_len5"))
       .groupBy("ag_lang", "ag_source", "ag_len5")
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("n")))
     def t(agree: String, mu: String) =
       when(col(agree), col(mu)).otherwise(lit(1.0) - col(mu))
     def eStep(params: DataFrame): DataFrame =
@@ -2324,13 +2321,12 @@ object Extensions {
       .unionByName(d.filter(col("doc_id") % 3 === 0)
         .select(lit("mirror").as("source"), col("text")))
     // #sources-row result consumed TWICE by the self-join below —
-    // checkpoint it once or the corpus+mirror scan, polyHash, and KMV
+    // materialize it once or the corpus+mirror scan, polyHash, and KMV
     // aggregation run twice (the derived-table re-inline class of
     // SURVEY lesson 6; the linkPredictQ convention).
-    val sk = withMirror
+    val sk = Materialize.once(withMirror
       .select(col("source"), TextKit.polyHash(col("text")).as("h"))
-      .groupBy("source").agg(KmvSketch(col("h"), k).as("mins"))
-      .localCheckpoint()
+      .groupBy("source").agg(KmvSketch(col("h"), k).as("mins")))
     val paired = sk.as("x")
       .join(broadcast(sk.as("y")), col("x.source") < col("y.source"))
       .select(col("x.source").as("source_a"), col("y.source").as("source_b"),
@@ -2551,10 +2547,10 @@ object Extensions {
     * dense cohorts; LPA keeps them apart). Plurality + min-label
     * tie-break, all-integer, so the oracle replays the rounds exactly. */
   def labelProp(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = coPurchaseEdges(spark, sfDir).localCheckpoint()
+    val edges = Materialize.once(coPurchaseEdges(spark, sfDir))
     val out = Graph.labelPropagation(edges, rounds = 3)
       .select(col("v").as("user_id"), col("community"))
-    Graph.freeCheckpoint(edges)
+    Materialize.free(edges)
     out
   }
 
@@ -3025,9 +3021,9 @@ object Extensions {
     * denominator) — "who would this recommender connect next". */
   def linkPredictQ(spark: SparkSession, sfDir: String): DataFrame =
     // The edge table feeds FOUR consumers (both wedge sides, the
-    // anti-join, the degree table); checkpoint the (now bucketed-table)
+    // anti-join, the degree table); materialize the (now bucketed-table)
     // scan once so it isn't re-read per consumer — SURVEY lesson 6.
-    Graph.linkPredict(coPurchaseEdges(spark, sfDir).localCheckpoint(),
+    Graph.linkPredict(Materialize.once(coPurchaseEdges(spark, sfDir)),
       maxMiddleDeg = 1024, minCommon = 2)
 
   /** Fixed-point PageRank ([[graft.ext.Graph.pageRank]]) over the same
@@ -3058,21 +3054,20 @@ object Extensions {
     * hops, so the DuckDB oracle replays the same four relaxations
     * bit-exactly. */
   def bfsReach(spark: SparkSession, sfDir: String): DataFrame = {
-    // Checkpoint the edge scan once: the seed derivation and the
+    // Materialize the edge scan once: the seed derivation and the
     // relaxation loop both read it (the heavy DERIVATION itself now
     // lives in the materialized co-purchase table, paid once per JVM).
-    val edges = coPurchaseEdges(spark, sfDir).localCheckpoint()
+    val edges = Materialize.once(coPurchaseEdges(spark, sfDir))
     val seeds = edges.select(explode(array(col("a"), col("b"))).as("v"))
       .distinct().filter(col("v") % 97 === 0)
-    // bfsDistances eagerly checkpoints everything it keeps (the
+    // bfsDistances eagerly materializes everything it keeps (the
     // undirected edge frame and each round's frontier), so the edges
-    // checkpoint is dead weight once it returns — free it here. The
-    // RETURNED frame still holds its own final-round checkpoint: Bench
-    // unpersists between queries; long-lived library callers should
-    // unpersist the result when done with it.
+    // handle is dead weight once it returns — free it here. The
+    // RETURNED frame still reads its own final-round handle, freed by
+    // the caller's Materialize.scope.
     val out = Graph.bfsDistances(edges, seeds, rounds = 4)
       .select(col("v").as("user_id"), col("dist"))
-    Graph.freeCheckpoint(edges)
+    Materialize.free(edges)
     out
   }
 
@@ -3083,10 +3078,10 @@ object Extensions {
     * give per-vertex cohesion and CC gives membership. Integer degree
     * arithmetic; the oracle unrolls the same four rounds. */
   def kcore(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = coPurchaseEdges(spark, sfDir).localCheckpoint()
+    val edges = Materialize.once(coPurchaseEdges(spark, sfDir))
     val out = Graph.kCorePeel(edges, k = 3, rounds = 4)
       .select(col("v").as("user_id"), col("peeled_round"))
-    Graph.freeCheckpoint(edges)
+    Materialize.free(edges)
     out
   }
 
@@ -3097,12 +3092,12 @@ object Extensions {
     * (cheapest path ≠ fewest hops when strong ties are cheap). Long
     * arithmetic throughout; the oracle replays the same rounds. */
   def sssp(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = coPurchaseEdgesWeighted(spark, sfDir).localCheckpoint()
+    val edges = Materialize.once(coPurchaseEdgesWeighted(spark, sfDir))
     val seeds = edges.select(explode(array(col("a"), col("b"))).as("v"))
       .distinct().filter(col("v") % 97 === 0)
     val out = Graph.ssspDistances(edges, seeds, rounds = 4)
       .select(col("v").as("user_id"), col("cost"))
-    Graph.freeCheckpoint(edges)
+    Materialize.free(edges)
     out
   }
 
@@ -3278,7 +3273,7 @@ object Extensions {
     // recursion round re-evaluates the plan subtree it references, so
     // leaving the (self-join-heavy) edge derivation inside the CTE
     // re-pays it per chain level — measured 11 s vs 2 s at sf0.1.
-    Graph.parentPointers(coPurchaseEdges(spark, sfDir)).localCheckpoint()
+    Materialize.once(Graph.parentPointers(coPurchaseEdges(spark, sfDir)))
       .createOrReplaceTempView("graft_rcte_parents")
     spark.sql(
       """WITH RECURSIVE
@@ -3804,12 +3799,11 @@ object Extensions {
     * global window. At 100 TB only the ratio table is shared state. */
   def dsirSelect(spark: SparkSession, sfDir: String): DataFrame = {
     val B = 64
-    val occ = docs(spark, sfDir)
+    val occ = Materialize.once(docs(spark, sfDir)
       .select(col("doc_id"), col("lang"),
         explode(TextKit.wordNgrams(col("text"), 2)).as("g"))
       .select(col("doc_id"), col("lang"),
-        (TextKit.polyHash(col("g")) % B).as("b"))
-      .localCheckpoint()
+        (TextKit.polyHash(col("g")) % B).as("b")))
     val ratios = occ.groupBy("b").agg(
       count(lit(1)).as("nr"),
       sum(when(col("lang") === "en", 1L).otherwise(0L)).as("nt"))

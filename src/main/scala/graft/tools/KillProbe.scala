@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.ext.{Dedup, Graph}
+import graft.core.Materialize
+import graft.ext.Dedup
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -11,9 +12,9 @@ import org.apache.spark.sql.functions._
   * JVMs, not local threads), SIGKILL one executor mid-iteration, and
   * record whether the job survives.
   *
-  * The claim under test (Graph.ckpt scaladoc): `localCheckpoint`
-  * truncates lineage onto executor-local blocks, so one lost executor
-  * kills the whole in-flight iterative job; reliable mode
+  * The claim under test ([[graft.core.Materialize]] scaladoc): a local
+  * checkpoint truncates lineage onto executor-local blocks, so one lost
+  * executor kills the whole in-flight iterative job; reliable mode
   * (`spark.graft.checkpoint.reliable=true`) re-reads checkpoint FILES
   * and recomputes only the lost partitions. Until r12 this was
   * demonstrated by dropping blocks in-process (ReliableCheckpointSpec);
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Modes: `reference` (no kill, prints the expected cluster hash),
   * `reliable` (kill + reliable checkpoints → must complete with the
-  * reference hash), `local` (kill + localCheckpoint → expected to
+  * reference hash), `local` (kill + local checkpoints → expected to
   * fail with a checkpoint/FetchFailed error; completing is ALSO fine
   * if Spark rescheduled before any truncated lineage was needed — the
   * probe records what happened, the JSON adjudicates).
@@ -84,11 +85,11 @@ object KillProbe {
     val t0 = System.nanoTime()
     val result: Either[String, (Long, Long)] =
       try {
-        val labels = Dedup.duplicateClusters(edges)
-        val row = labels.agg(
-          count(lit(1)).as("n"),
-          sum(expr("hash(node, label)").cast("long")).as("h")).collect().head
-        Graph.freeCheckpoint(labels)
+        val row = Materialize.scope(spark) {
+          Dedup.duplicateClusters(edges).agg(
+            count(lit(1)).as("n"),
+            sum(expr("hash(node, label)").cast("long")).as("h")).collect().head
+        }
         Right((row.getLong(0), row.getLong(1)))
       } catch {
         case e: Throwable =>

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Materialize
 import graft.queries.Parity
 
 import org.apache.spark.sql.DataFrame
@@ -299,63 +300,67 @@ class PlanShapeSpec extends SparkSpec {
       (4L, 5L), (5L, 6L), (2L, 6L))).toDF("a", "b")
 
   test("bfs loop body shuffles only the min-merge, never the edges") {
+    import graft.core.Materialize
     import graft.ext.Graph
     noBroadcast {
       val und = Graph.undBySrc(graphEdges)
       // state as every round ≥ 2 sees it: hash-partitioned on v by its own
       // aggregation, layout preserved through the checkpoint
-      val dist = Graph.checkpointKeyed(und.select(col("u").as("v"))
-        .distinct().select(col("v"), lit(0L).as("dist")), "v")
+      val dist = Materialize.once(und.select(col("u").as("v"))
+        .distinct().select(col("v"), lit(0L).as("dist")), Some("v"))
       val round = Graph.bfsRound(dist, und)
       assert(nShuffles(round) == 1,
         s"bfs round must have exactly the min-merge exchange:\n${round.queryExecution.executedPlan}")
-      Graph.freeCheckpoint(und); Graph.freeCheckpoint(dist)
+      Materialize.free(und); Materialize.free(dist)
     }
   }
 
   test("sssp loop body shuffles only the min-merge, never the edges") {
+    import graft.core.Materialize
     import graft.ext.Graph
     noBroadcast {
       val und = Graph.undBySrc(graphEdges.withColumn("w", lit(2L)),
         extra = Seq("w"))
-      val cost = Graph.checkpointKeyed(und.select(col("u").as("v"))
-        .distinct().select(col("v"), lit(0L).as("cost")), "v")
+      val cost = Materialize.once(und.select(col("u").as("v"))
+        .distinct().select(col("v"), lit(0L).as("cost")), Some("v"))
       val round = Graph.ssspRound(cost, und)
       assert(nShuffles(round) == 1,
         s"sssp round must have exactly the min-merge exchange:\n${round.queryExecution.executedPlan}")
-      Graph.freeCheckpoint(und); Graph.freeCheckpoint(cost)
+      Materialize.free(und); Materialize.free(cost)
     }
   }
 
   test("label-propagation loop body shuffles only its two aggregations") {
+    import graft.core.Materialize
     import graft.ext.Graph
     noBroadcast {
       val und = Graph.undBySrc(graphEdges)
       // steady-state round shape: label is its own attribute (round ≥ 2);
       // round 1's label ≡ node aliasing even skips the message-count
       // exchange, so it is not the shape to pin
-      val labels = Graph.checkpointKeyed(
+      val labels = Materialize.once(
         und.groupBy(col("u").as("node")).agg(min(col("v")).as("label")),
-        "node")
+        Some("node"))
       val round = Graph.lpRound(labels, und)
       // (v, label) plurality counts + per-v argmax; message join and adopt
       // join are both co-partitioned
       assert(nShuffles(round) == 2,
         s"lp round must have exactly its two aggregation exchanges:\n${round.queryExecution.executedPlan}")
-      Graph.freeCheckpoint(und); Graph.freeCheckpoint(labels)
+      Materialize.free(und); Materialize.free(labels)
     }
   }
 
   test("k-core degree update shuffles only the lost-count merge") {
+    import graft.core.Materialize
     import graft.ext.Graph
     noBroadcast {
       val und = Graph.undBySrc(graphEdges, key = "v")
-      val deg = Graph.checkpointKeyed(
-        und.groupBy("u").agg(count(lit(1)).as("deg")), "u")
+      val deg = Materialize.once(
+        und.groupBy("u").agg(count(lit(1)).as("deg")), Some("u"))
       val next = Graph.kcoreNextDeg(deg, und, k = 3)
       assert(nShuffles(next) == 1,
         s"k-core round must have exactly the lost-count exchange:\n${next.queryExecution.executedPlan}")
-      Graph.freeCheckpoint(und); Graph.freeCheckpoint(deg)
+      Materialize.free(und); Materialize.free(deg)
     }
   }
 

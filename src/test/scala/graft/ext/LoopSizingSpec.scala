@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Pins the r12 scale-adaptive loop layout ([[Graph.loopSized]] /
   * [[Graph.loopPartitions]], guide §2.2 "size reducers by bytes"):
-  * the iterative loops opt out of AQE inside `checkpointKeyed` (so the
+  * the iterative loops opt out of AQE inside keyed `Materialize.once` (so the
   * recorded layout is honest), which also opts them out of runtime
   * coalescing — the adaptive layout restores byte-derived sizing with a
   * hard cap at the session count, so 100 TB behavior is unchanged while
@@ -24,13 +24,13 @@ class LoopSizingSpec extends SparkSpec {
     assert(sessionP > 2, "spec needs session partitions above the floor")
     val (sized, p) = Graph.loopSized(und, "u")
     assert(p == 2, s"a KB-scale table must land on the floor count, got $p")
-    // the re-keyed frame still satisfies checkpointKeyed's layout contract
+    // the re-keyed frame still satisfies keyed Materialize.once's layout contract
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     sized.queryExecution.executedPlan.outputPartitioning match {
       case h: HashPartitioning => assert(h.numPartitions == p)
       case other => fail(s"expected hash layout, got $other")
     }
-    Graph.freeCheckpoint(sized)
+    graft.core.Materialize.free(sized)
   }
 
   test("loopPartitions caps at the session count for large measured bytes") {

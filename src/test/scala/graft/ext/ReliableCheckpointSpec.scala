@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import graft.core.Materialize
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -48,22 +49,22 @@ class ReliableCheckpointSpec extends SparkSpec {
     assert(bfsRel == bfsLocal)
   }
 
-  test("checkpointKeyed preserves the keyed hash layout in reliable mode") {
-    // The require() inside checkpointKeyed IS the assertion — it throws
+  test("reliable mode keeps the keyed hash layout") {
+    // The require() inside keyed Materialize.once IS the assertion — it throws
     // if the reliable path loses the partitioning the loops rely on.
     withReliable {
       val df = pairs.toDF("a", "b").select(col("a").as("u"), col("b").as("v"))
         .repartition(4, col("u"))
-      val out = Graph.checkpointKeyed(df, "u")
+      val out = Materialize.once(df, Some("u"))
       assert(out.count() == pairs.size)
     }
   }
 
-  test("freeCheckpoint deletes a reliable round's checkpoint files") {
+  test("free deletes a reliable round's checkpoint dir") {
     // Without deletion a long iterative run (up to 100 rounds per query,
     // many queries per session) grows the durable checkpoint FS
     // unboundedly — nothing else cleans reliable checkpoints.
-    val frame = withReliable { Graph.ckpt(Seq(1L, 2L, 3L).toDF("x")) }
+    val frame = withReliable { Materialize.once(Seq(1L, 2L, 3L).toDF("x")) }
     val ckptFile = frame.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
       case other => fail(s"expected LogicalRDD, got ${other.getClass}")
@@ -72,9 +73,9 @@ class ReliableCheckpointSpec extends SparkSpec {
     val path = new org.apache.hadoop.fs.Path(ckptFile.get)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(path), "checkpoint dir should exist while the frame is live")
-    Graph.freeCheckpoint(frame)
+    Materialize.free(frame)
     assert(!fs.exists(path),
-      "freeCheckpoint must delete the reliable round's checkpoint dir")
+      "Materialize.free must delete the reliable round's checkpoint dir")
     // duplicateClusters frees each superseded round internally: after a
     // full reliable run, at most the FINAL frames' dirs remain — the
     // per-iteration dirs are gone.
@@ -90,6 +91,27 @@ class ReliableCheckpointSpec extends SparkSpec {
       s"reliable CC run left ${after - before} checkpoint dirs behind")
   }
 
+  test("reliable mode sizes loops from the checkpoint files' length") {
+    // The measured size in reliable mode is the checkpoint dir's content
+    // length, so a KB-scale loop input lands on the floor count (2) as in
+    // local mode, instead of the session count.
+    withReliable {
+      val und = Graph.undBySrc(pairs.toDF("a", "b"))
+      val dir = und.queryExecution.analyzed match {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile.get
+        case other => fail(s"expected LogicalRDD, got ${other.getClass}")
+      }
+      val path = new org.apache.hadoop.fs.Path(dir)
+      val len = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(path).getLength
+      assert(Materialize.measuredBytes(und) == Some(len))
+      assert(spark.sessionState.conf.numShufflePartitions > 2)
+      val (sized, p) = Graph.loopSized(und, "u")
+      assert(p == 2, s"a KB-scale reliable loop input must land on the floor, got $p")
+      Materialize.free(sized)
+    }
+  }
+
   test("reliable checkpoint survives block loss; local checkpoint does not") {
     def dropBlocks(df: DataFrame): Unit =
       df.queryExecution.analyzed match {
@@ -100,7 +122,7 @@ class ReliableCheckpointSpec extends SparkSpec {
     // Reliable: backing data is checkpoint FILES; dropping the cached
     // blocks (the closest local-mode analogue to losing the executor
     // that held them) still recomputes from disk.
-    val rel = withReliable { Graph.ckpt(Seq(1L, 2L, 3L).toDF("x")) }
+    val rel = withReliable { Materialize.once(Seq(1L, 2L, 3L).toDF("x")) }
     dropBlocks(rel)
     assert(rel.count() == 3)
     // Local: same loss kills the frame — lineage was truncated and the

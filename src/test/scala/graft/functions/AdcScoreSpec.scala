@@ -44,6 +44,17 @@ class AdcScoreSpec extends SparkSpec {
     }
   }
 
+  test("lut and codes of different lengths yield null") {
+    val lut = Seq(Seq(1.0, 2.0), Seq(3.0, 4.0))
+    val out = Seq((1L, lut, Seq(0)), (2L, lut, Seq(0, 1, 1)), (3L, lut, Seq(1, 0)))
+      .toDF("id", "lut", "codes")
+      .select(graft.functions.AdcScore(col("lut"), col("codes")).as("a"))
+      .collect()
+    assert(out(0).isNullAt(0), "short codes")
+    assert(out(1).isNullAt(0), "long codes")
+    assert(out(2).getDouble(0) == 5.0)
+  }
+
   test("graft_adc_score registers as a SQL function") {
     GraftExtensions.register(spark)
     val got = spark.sql(

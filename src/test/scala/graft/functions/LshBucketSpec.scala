@@ -73,6 +73,21 @@ class LshBucketSpec extends SparkSpec {
     assert(got == 15L)
   }
 
+  test("more than 63 planes is rejected: at analysis for a literal, in the task for a column") {
+    val df = Seq((1L, Seq(1.0f, -2.0f), 64)).toDF("vec_id", "embedding", "b")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(Similarity.lshBucket(col("embedding"), 64))
+    }
+    val e = intercept[Exception] {
+      df.select(Similarity.lshBucketDyn(col("embedding"), col("b"), lit(0))).collect()
+    }
+    assert(e.getMessage.contains("at most 63 planes"), e.getMessage)
+    // 63 planes still fit: every bit set on the empty-sum edge stays non-negative
+    val ok = Seq((1L, Seq.empty[Float])).toDF("vec_id", "embedding")
+      .select(Similarity.lshBucket(col("embedding"), 63)).head().getLong(0)
+    assert(ok == Long.MaxValue)
+  }
+
   test("graft_lsh_bucket registers as a SQL function") {
     GraftExtensions.register(spark)
     val got = spark.sql(

@@ -47,4 +47,19 @@ class GlobalOrderSpec extends SparkSpec {
     val out = GlobalOrder.rowNumbered(d, "rn", 8, col("id"))
     assert(out.rdd.getNumPartitions === 8)
   }
+
+  test("prefixSummed emits the inclusive weight prefix in key order") {
+    val d = Seq((30L, 2L), (10L, 1L), (20L, 4L), (40L, 3L)).toDF("k", "w")
+    val got = GlobalOrder.prefixSummed(d, "w", "cw", 3, col("k"))
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(got === Map(10L -> 1L, 20L -> 5L, 30L -> 7L, 40L -> 10L))
+  }
+
+  test("prefixSummed rejects a non-long weight column at the call") {
+    val d = Seq((1L, 2), (2L, 3)).toDF("k", "w")
+    val e = intercept[IllegalArgumentException] {
+      GlobalOrder.prefixSummed(d, "w", "cw", 2, col("k"))
+    }
+    assert(e.getMessage.contains("LongType"), e.getMessage)
+  }
 }
