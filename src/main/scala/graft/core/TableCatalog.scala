@@ -2,6 +2,10 @@ package graft.core
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -121,22 +125,74 @@ final class TableCatalog(val root: String,
     * new set — never new silver with stale gold. Per-table `_CURRENT`
     * pointers converge right after (a semantic no-op: [[currentPath]]
     * already resolves committed entries), keeping plain readers and
-    * external tools on the ordinary pointer protocol. Partial failure
-    * before the commit swap leaves only unreferenced version dirs —
-    * nothing published, nothing torn. */
-  def publishAtomic(batches: Seq[(String, DataFrame)]): Map[String, String] = {
-    require(batches.map(_._1).distinct.size == batches.size,
-      "publishAtomic: duplicate table names in one transaction")
+    * external tools on the ordinary pointer protocol. The frames stage
+    * concurrently and fail as in [[publishAtomicChained]], whose body
+    * this is with constant builds. */
+  def publishAtomic(batches: Seq[(String, DataFrame)]): Map[String, String] =
+    if (batches.isEmpty) Map.empty
+    else publishAtomicChained(batches.head._2.sparkSession,
+      batches.map { case (name, df) => TableCatalog.ChainedBatch(name, _ => df) })
+
+  /** [[publishAtomic]] for DERIVED layers (the medallion silver→gold
+    * dependency): each batch is a function of a resolver that reads
+    * tables staged EARLIER in the same transaction from their staged
+    * parquet — so gold is computed from the exact silver bytes this
+    * commit will publish, without publishing silver early and without
+    * recomputing the silver lineage. Any other name, including one
+    * staged LATER in the transaction, resolves through the live catalog
+    * (e.g. an SCD2 merge base = pre-transaction state).
+    *
+    * Phase 1 stages the batches concurrently on [[Lanes]] (lane count
+    * `max(1, min(batches, defaultParallelism / 2))`), taken in batch
+    * order. Every batch has a promise of its staged directory; a
+    * resolver call for an earlier batch's name waits on that promise, so
+    * a batch waits only on lower indexes and the bounded lanes cannot
+    * deadlock. Phases 2–4 stay sequential in batch order: claim version
+    * slots, ONE ATOMIC_MOVE of the commit file that publishes the whole
+    * chain, then per-table pointer convergence — so version numbers are
+    * claimed in batch order, as before.
+    *
+    * Failure while staging: batches not yet started are skipped, the
+    * in-flight ones finish, every stage directory this transaction made
+    * is deleted, and the first failure in batch order is rethrown.
+    * Nothing is published. A failure in Phases 2–4 before the commit
+    * swap leaves only unreferenced version dirs — nothing torn.
+    *
+    * Scale shape: staging IS the full write cost (same as committing
+    * each layer separately); the added cost is only metadata. Each
+    * staged layer is a materialization barrier, so a 1000-executor run
+    * writes silver once and reads it back for gold — no double compute,
+    * and the commit swap is a single rename regardless of data size. */
+  def publishAtomicChained(spark: SparkSession,
+      batches: Seq[TableCatalog.ChainedBatch]): Map[String, String] = {
+    require(batches.map(_.name).distinct.size == batches.size,
+      "publishAtomicChained: duplicate table names in one transaction")
+    val index = batches.map(_.name).zipWithIndex.toMap
+    val promises = batches.map(_ => Promise[Path]())
+    val stages = new ConcurrentLinkedQueue[Path]
     // Phase 1 — stage every batch OUTSIDE any lock (the expensive part).
-    val staged = batches.map { case (name, df) =>
-      val dir = tableDir(name)
-      Files.createDirectories(dir)
-      val (dfGen, genChecks) = applyGenerated(df, name)
-      val (guarded, guard) = guardConstraints(dfGen, name, genChecks)
+    val staged = try Lanes.run(spark, batches.zipWithIndex.map { case (b, i) => () =>
+      def resolver(n: String): DataFrame = index.get(n).filter(_ < i) match {
+        case Some(j) => spark.read.parquet(Await.result(promises(j).future, Duration.Inf).toString)
+        case None => read(spark, n)
+      }
+      val dir = tableDir(b.name)
       val stage = newStageDir(dir)
-      guarded.write.mode("overwrite").parquet(stage.toString)
-      enforceConstraints(guard, name, stage)
-      (name, dir, stage)
+      stages.add(stage)
+      try {
+        Files.createDirectories(dir)
+        val (dfGen, genChecks) = applyGenerated(b.build(resolver), b.name)
+        val (guarded, guard) = guardConstraints(dfGen, b.name, genChecks)
+        val w = guarded.write.mode("overwrite")
+        (if (b.partitionBy.nonEmpty) w.partitionBy(b.partitionBy: _*) else w)
+          .parquet(stage.toString)
+        enforceConstraints(guard, b.name, stage)
+      } catch { case e: Throwable => promises(i).failure(e); throw e }
+      promises(i).success(stage)
+      (b.name, dir, stage)
+    }) catch { case e: Throwable =>
+      stages.forEach(s => scala.util.Try(deleteRecursively(s)))
+      throw e
     }
     // Phase 2 — claim version slots (short per-table critical sections).
     val claimed = staged.map { case (name, dir, stage) =>
@@ -154,67 +210,6 @@ final class TableCatalog(val root: String,
       writeMultiCurrent(multiCurrent() ++ claimed)
     }
     // Phase 4 — converge per-table pointers (+ bounded version pruning).
-    claimed.foreach { case (name, v) =>
-      val dir = tableDir(name)
-      withCommitLock(dir) { repoint(dir, name, v) }
-    }
-    claimed.toMap
-  }
-
-  /** Chained variant of [[publishAtomic]] for DERIVED layers (the
-    * medallion silver→gold dependency): each batch is a function of a
-    * resolver that reads tables staged EARLIER in the same transaction
-    * from their staged parquet — so gold is computed from the exact
-    * silver bytes this commit will publish, without publishing silver
-    * early and without recomputing the silver lineage. Tables not staged
-    * in this transaction resolve through the live catalog (e.g. an SCD2
-    * merge base = pre-transaction state). Commit semantics are identical:
-    * one ATOMIC_MOVE of the commit file publishes the whole chain;
-    * failure while staging leaves nothing published.
-    *
-    * Scale shape: staging IS the full write cost (same as committing
-    * each layer separately); the added cost is only metadata. Each
-    * staged layer is a materialization barrier, so a 1000-executor run
-    * writes silver once and reads it back for gold — no double compute,
-    * and the commit swap is a single rename regardless of data size. */
-  def publishAtomicChained(spark: SparkSession,
-      batches: Seq[TableCatalog.ChainedBatch]): Map[String, String] = {
-    require(batches.map(_.name).distinct.size == batches.size,
-      "publishAtomicChained: duplicate table names in one transaction")
-    val stagedSoFar = scala.collection.mutable.LinkedHashMap.empty[String, Path]
-    def resolver(n: String): DataFrame = stagedSoFar.get(n) match {
-      case Some(stage) => spark.read.parquet(stage.toString)
-      case None => read(spark, n)
-    }
-    // Phase 1 — stage each batch in dependency order, outside any lock.
-    val staged = batches.map { b =>
-      val dir = tableDir(b.name)
-      Files.createDirectories(dir)
-      val (dfGen, genChecks) = applyGenerated(b.build(resolver), b.name)
-      val (guarded, guard) = guardConstraints(dfGen, b.name, genChecks)
-      val stage = newStageDir(dir)
-      val w = guarded.write.mode("overwrite")
-      (if (b.partitionBy.nonEmpty) w.partitionBy(b.partitionBy: _*) else w)
-        .parquet(stage.toString)
-      enforceConstraints(guard, b.name, stage)
-      stagedSoFar(b.name) = stage
-      (b.name, dir, stage)
-    }
-    // Phases 2-4 — identical to publishAtomic: claim slots, one commit
-    // swap, pointer convergence.
-    val claimed = staged.map { case (name, dir, stage) =>
-      withCommitLock(dir) {
-        val v = "v%06d".format(nextVersion(dir))
-        Files.move(stage, dir.resolve(v), StandardCopyOption.ATOMIC_MOVE)
-        val ts = dir.resolve(v).resolve("_commit_ts")
-        if (!Files.exists(ts))
-          Files.writeString(ts, System.currentTimeMillis().toString)
-        name -> v
-      }
-    }
-    withCommitLock(Paths.get(root)) {
-      writeMultiCurrent(multiCurrent() ++ claimed)
-    }
     claimed.foreach { case (name, v) =>
       val dir = tableDir(name)
       withCommitLock(dir) { repoint(dir, name, v) }
@@ -2166,7 +2161,8 @@ final class TableCatalog(val root: String,
 object TableCatalog {
   /** One table in a [[TableCatalog.publishAtomicChained]] transaction:
     * `build` receives a resolver that reads same-transaction tables
-    * staged before this one (else the live catalog). */
+    * staged before this one (else the live catalog). `build` runs on a
+    * staging lane, concurrently with other batches' builds. */
   final case class ChainedBatch(
       name: String,
       build: (String => org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,

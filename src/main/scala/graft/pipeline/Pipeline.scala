@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.config.Configs._
-import graft.core.{Clock, TableCatalog}
+import graft.core.{Clock, Lanes, TableCatalog}
 import graft.ops._
 import graft.scd.{Scd2, ScdColumns}
 import graft.schema.SchemaRegistry
@@ -17,9 +17,14 @@ import org.apache.spark.sql.functions._
 object Pipeline {
 
   /** Bronze Companies House: raw JSON → typed bronze tables
-    * (`medallion/bronze/ds2b_company_house.py:17-101`). */
-  def bronzeCompanyHouse(spark: SparkSession, conf: BronzeConf, cat: TableCatalog): Unit = {
-    conf.tables.foreach { t =>
+    * (`medallion/bronze/ds2b_company_house.py:17-101`), one table per
+    * [[Lanes]] job, each with its own commit. */
+  def bronzeCompanyHouse(spark: SparkSession, conf: BronzeConf, cat: TableCatalog): Unit =
+    Lanes.run(spark, bronzeCompanyHouseJobs(spark, conf, cat))
+
+  private def bronzeCompanyHouseJobs(spark: SparkSession, conf: BronzeConf,
+      cat: TableCatalog): Seq[() => Unit] =
+    conf.tables.map { t => () =>
       val glob = s"${conf.basePath}/*/*/${t.file}"
       var df = Ingest.json(spark, SchemaRegistry.companiesHouse(t.name), glob)
       df = Ingest.withPathIdentity(Ingest.withFilePath(df))
@@ -30,26 +35,36 @@ object Pipeline {
       df = Ingest.withAudit(df)
       cat.overwrite(df, s"${conf.catalog}.${conf.schema}.${t.name}")
     }
-  }
 
   /** Bronze YFinance: raw CSV → typed bronze tables
-    * (`medallion/bronze/ds2b_yfinance.py:17-78`). */
-  def bronzeYFinance(spark: SparkSession, conf: BronzeConf, cat: TableCatalog): Unit = {
-    conf.tables.foreach { t =>
+    * (`medallion/bronze/ds2b_yfinance.py:17-78`), one table per
+    * [[Lanes]] job, each with its own commit. */
+  def bronzeYFinance(spark: SparkSession, conf: BronzeConf, cat: TableCatalog): Unit =
+    Lanes.run(spark, bronzeYFinanceJobs(spark, conf, cat))
+
+  private def bronzeYFinanceJobs(spark: SparkSession, conf: BronzeConf,
+      cat: TableCatalog): Seq[() => Unit] =
+    conf.tables.map { t => () =>
       val glob = s"${conf.basePath}/${t.file}"
       var df = Ingest.csv(spark, SchemaRegistry.yfinance(t.name), glob)
       df = Ingest.withFilePath(df)
       df = Ingest.cleanColumnNames(Ingest.withAudit(df))
       cat.overwrite(df, s"${conf.catalog}.${conf.schema}.${t.name}")
     }
-  }
 
   /** Silver company master (`medallion/silver/b2s_company_house.py:55-136`). */
   def silverCompanyMaster(spark: SparkSession, catalog: String, cat: TableCatalog,
-      clock: Clock = Clock.Wall): Unit = {
-    val b = silverCompanyMasterBatch(catalog, clock)
-    cat.overwrite(b.build(n => cat.read(spark, n)), b.name, b.partitionBy)
-  }
+      clock: Clock = Clock.Wall): Unit =
+    overwriteEach(spark, cat, Seq(silverCompanyMasterBatch(catalog, clock)))
+
+  /** Publish each batch as its own single-table commit, concurrently on
+    * [[Lanes]]; every name a batch reads resolves through the live
+    * catalog. */
+  private def overwriteEach(spark: SparkSession, cat: TableCatalog,
+      batches: Seq[TableCatalog.ChainedBatch]): Unit =
+    Lanes.run(spark, batches.map { b => () =>
+      cat.overwrite(b.build(n => cat.read(spark, n)), b.name, b.partitionBy)
+    })
 
   private def silverCompanyMasterBatch(catalog: String, clock: Clock) =
     TableCatalog.ChainedBatch(s"$catalog.silver.company_master", read => {
@@ -63,9 +78,7 @@ object Pipeline {
   /** Silver SCD2 for YFinance tables (`medallion/silver/b2s_yfinance.py:66-190`). */
   def silverScd2(spark: SparkSession, conf: SilverConf, cat: TableCatalog,
       clock: Clock = Clock.Wall): Unit =
-    silverScd2Batches(spark, conf, cat, clock).foreach { b =>
-      cat.overwrite(b.build(n => cat.read(spark, n)), b.name, b.partitionBy)
-    }
+    overwriteEach(spark, cat, silverScd2Batches(spark, conf, cat, clock))
 
   private def silverScd2Batches(spark: SparkSession, conf: SilverConf,
       cat: TableCatalog, clock: Clock): Seq[TableCatalog.ChainedBatch] =
@@ -86,9 +99,7 @@ object Pipeline {
   /** Gold: promote + dimensions (current snapshot, clustered) + facts
     * with KPIs (`medallion/gold/s2g.py:58-156`). */
   def gold(spark: SparkSession, conf: GoldConf, cat: TableCatalog): Unit =
-    goldBatches(conf).foreach { b =>
-      cat.overwrite(b.build(n => cat.read(spark, n)), b.name, b.partitionBy)
-    }
+    overwriteEach(spark, cat, goldBatches(conf))
 
   private def goldBatches(conf: GoldConf): Seq[TableCatalog.ChainedBatch] = {
     def silverName(n: String) = s"${conf.catalog}.${conf.sourceSchema}.$n"
@@ -115,20 +126,32 @@ object Pipeline {
     promoted ++ dims ++ facts
   }
 
-  /** Fail-fast orchestration (`main.py:29-40`): bronze lands per-table
-    * (raw ingest, no cross-table invariant), then silver AND gold stage
-    * in dependency order and publish in ONE multi-table atomic commit
+  /** Fail-fast orchestration (`main.py:29-40`), with independent tables
+    * staged concurrently on [[Lanes]] (lane count `max(1, min(tables,
+    * defaultParallelism / 2))`) instead of the reference's one-table-at-
+    * a-time loop.
+    *
+    * Bronze: the six bronze tables run concurrently, each landing with
+    * its own per-table commit (raw ingest, no cross-table invariant).
+    * Silver and gold start only after every bronze lane has finished;
+    * they stage concurrently and publish in ONE multi-table atomic commit
     * ([[TableCatalog.publishAtomicChained]]) — a [[TableCatalog.snapshot]]
     * reader never observes new silver with stale gold, which the
     * reference's sequential Delta writes cannot guarantee. Gold builds
     * from the exact staged silver bytes (no early publish, no double
-    * compute); any layer exception aborts with nothing published. */
+    * compute).
+    *
+    * Failure: if a bronze table fails, bronze tables already in flight
+    * still publish, those not yet started are skipped, silver and gold
+    * never start, and the first failure in table order is rethrown. A
+    * silver or gold failure aborts the transaction with nothing
+    * published and no staged data left behind. */
   def run(spark: SparkSession,
       bronzeCh: BronzeConf, bronzeYf: BronzeConf,
       silverYf: SilverConf, goldConf: GoldConf,
       cat: TableCatalog, clock: Clock = Clock.Wall): Unit = {
-    bronzeCompanyHouse(spark, bronzeCh, cat)
-    bronzeYFinance(spark, bronzeYf, cat)
+    Lanes.run(spark, bronzeCompanyHouseJobs(spark, bronzeCh, cat) ++
+      bronzeYFinanceJobs(spark, bronzeYf, cat))
     cat.publishAtomicChained(spark,
       silverCompanyMasterBatch(bronzeCh.catalog, clock) +:
         (silverScd2Batches(spark, silverYf, cat, clock) ++ goldBatches(goldConf)))

@@ -8,6 +8,7 @@ import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** Commit-protocol concurrency: simultaneous writers must each publish a
   * complete version with no lost batches, and crashed-writer debris
@@ -204,5 +205,74 @@ class CatalogConcurrencySpec extends SparkSpec {
       gT -> Seq((9L, 2L)).toDF("id", "run")))
     assert(cat.read(spark, sT).select("run").head().getLong(0) == 2L)
     assert(cat.snapshot().read(spark, gT).select("run").head().getLong(0) == 2L)
+  }
+
+  private def stageDirs(cat: TableCatalog): Seq[String] = {
+    val walk = Files.walk(Paths.get(cat.root))
+    try walk.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(".stage-")).toSeq
+    finally walk.close()
+  }
+
+  private def runOf(cat: TableCatalog, t: String): Long =
+    cat.read(spark, t).select("run").head().getLong(0)
+
+  test("publishAtomicChained: a failing middle batch publishes nothing and leaves no staging") {
+    val cat = freshCatalog("chainfail")
+    val ts = Seq("main.silver.cf_a", "main.silver.cf_b", "main.gold.cf_c")
+    cat.publishAtomic(ts.map(_ -> Seq((1L, 1L)).toDF("id", "run")))
+    def pointers: Seq[String] = ts.map(t => Files.readString(
+      Paths.get(cat.root, t.split('.'): _*).resolve("_CURRENT")))
+    val multi = Files.readString(Paths.get(cat.root, "_MULTI_CURRENT"))
+    val before = pointers
+    val boom = intercept[IllegalStateException] {
+      cat.publishAtomicChained(spark, Seq(
+        TableCatalog.ChainedBatch(ts(0), _ => Seq((1L, 2L)).toDF("id", "run")),
+        TableCatalog.ChainedBatch(ts(1), read => {
+          read(ts(0)).count() // waits until batch 0 has staged
+          throw new IllegalStateException("middle batch failed")
+        }),
+        TableCatalog.ChainedBatch(ts(2), _ => Seq((1L, 2L)).toDF("id", "run"))))
+    }
+    assert(boom.getMessage == "middle batch failed")
+    assert(Files.readString(Paths.get(cat.root, "_MULTI_CURRENT")) == multi)
+    assert(pointers == before)
+    ts.foreach(t => assert(runOf(cat, t) == 1L, t))
+    assert(stageDirs(cat).isEmpty, s"staging left behind: ${stageDirs(cat)}")
+    assert(liveLanes.isEmpty, s"lane threads alive: $liveLanes")
+  }
+
+  test("publishAtomicChained: earlier names resolve to staged bytes, later names to the live version") {
+    val cat = freshCatalog("chainread")
+    val (a, b, c) = ("main.silver.cr_a", "main.gold.cr_b", "main.silver.cr_c")
+    cat.publishAtomic(Seq(a, b, c).map(_ -> Seq((1L, 1L)).toDF("id", "run")))
+    cat.publishAtomicChained(spark, Seq(
+      TableCatalog.ChainedBatch(a, _ => Seq((1L, 2L)).toDF("id", "run")),
+      TableCatalog.ChainedBatch(b, read =>
+        read(a).select($"id", $"run".as("from_a"))
+          .join(read(c).select($"id", $"run".as("from_c")), "id")
+          .withColumn("run", $"from_a")),
+      TableCatalog.ChainedBatch(c, _ => Seq((1L, 2L)).toDF("id", "run"))))
+    val row = cat.read(spark, b).select("from_a", "from_c").head()
+    assert((row.getLong(0), row.getLong(1)) == ((2L, 1L)))
+    assert(runOf(cat, a) == 2L && runOf(cat, c) == 2L)
+  }
+
+  test("publishAtomicChained: version slots are claimed in batch order, not staging order") {
+    val cat = freshCatalog("chainorder")
+    val ts = (0 until 4).map(i => s"main.gold.co_$i")
+    cat.publishAtomicChained(spark, ts.zipWithIndex.map { case (t, i) =>
+      TableCatalog.ChainedBatch(t, _ => {
+        // batch 0 finishes staging last
+        if (i == 0) Thread.sleep(1500)
+        Seq((i.toLong, 1L)).toDF("id", "run")
+      })
+    })
+    val claimedAt = ts.map { t =>
+      val dir = Paths.get(cat.root, t.split('.'): _*)
+      Files.readString(dir.resolve(Files.readString(dir.resolve("_CURRENT")).trim)
+        .resolve("_commit_ts")).trim.toLong
+    }
+    assert(claimedAt == claimedAt.sorted, s"claim times by batch: $claimedAt")
   }
 }

@@ -314,6 +314,54 @@ class PipelineSpec extends SparkSpec {
         snap.read(spark, "companies.silver.trading_data")))))
   }
 
+  test("staging lanes: none outlives Pipeline.run; a failed bronze table never starts silver or gold") {
+    val root = Files.createTempDirectory("graft-lanes")
+    val ch = root.resolve("raw/companies_house")
+    val co = ch.resolve("ingestion_date=2026-01-01/00000001")
+    write(co.resolve("overview.json"),
+      overviewJson("Alpha Ltd", "00000001", "active", "2000-06-15"))
+    write(co.resolve("officers.json"), """{"items": [{"name": "Jo",
+      |"officer_role": "director", "appointed_on": "2001-01-01"}]}""".stripMargin)
+    write(co.resolve("filing-history.json"), """{"items": [{"date": "2025-10-01",
+      |"type": "AA", "description": "accounts", "category": "accounts"}]}""".stripMargin)
+    val yf = root.resolve("raw/yfinance")
+    write(yf.resolve("trading_data/part0.csv"),
+      """company_number,ticker,date,open,high,low,close,adj_close,volume,ingestion_date
+        |00000001,ALP,2026-01-05,10.0,11.0,9.5,10.5,10.5,1000,2026-01-06
+        |""".stripMargin)
+    val bronzeCh = BronzeConf("companies", "bronze", ch.toString, "json", Seq(
+      BronzeTableConf("overview", "overview.json"),
+      BronzeTableConf("officers", "officers.json", explode = true, Some("items")),
+      BronzeTableConf("filing_history", "filing-history.json", explode = true, Some("items"))))
+    val bronzeYf = BronzeConf("companies", "bronze", yf.toString, "csv",
+      Seq(BronzeTableConf("trading_data", "trading_data/*.csv")))
+    val silverYf = SilverConf("companies", "bronze", "silver", Seq(
+      ScdTableConf("trading_data", Seq("company_number", "date"),
+        Seq("open", "high", "low", "close", "adj_close", "volume"))))
+    val goldConf = GoldConf("companies", "silver", "gold",
+      promoteTables = Seq("company_master"), dimensions = Nil,
+      facts = Seq(FactConf("fact_trading", "trading_data", "date", Nil)))
+
+    val cat = new TableCatalog(root.resolve("warehouse").toString)
+    Pipeline.run(spark, bronzeCh, bronzeYf, silverYf, goldConf, cat, Clock.fixed("2026-01-10"))
+    assert(cat.read(spark, "companies.gold.fact_trading").count() == 1L)
+    assert(liveLanes.isEmpty, s"lane threads alive after a run: $liveLanes")
+
+    // the first bronze table fails (no input files): silver and gold never start
+    val failed = new TableCatalog(root.resolve("warehouse_failed").toString)
+    val noOverview = bronzeCh.copy(tables = bronzeCh.tables.map(t =>
+      if (t.name == "overview") t.copy(file = "missing.json") else t))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Pipeline.run(spark, noOverview, bronzeYf, silverYf, goldConf, failed,
+        Clock.fixed("2026-01-10"))
+    }
+    assert(e.getMessage.contains("missing.json"))
+    assert(liveLanes.isEmpty, s"lane threads alive after a failed run: $liveLanes")
+    assert(!failed.exists("companies.bronze.overview"))
+    assert(failed.listTables().forall(_.startsWith("companies.bronze.")),
+      s"silver/gold started: ${failed.listTables()}")
+  }
+
   test("compaction rewrites many small files into few, content intact") {
     import spark.implicits._
     val cat = new TableCatalog(

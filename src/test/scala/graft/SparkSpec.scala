@@ -7,6 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * test run fast; suites must not mutate global conf destructively). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Names of staging-lane threads ([[graft.core.Lanes]]) still alive. */
+  def liveLanes: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("graft-stage-")).map(_.getName)
+  }
 }
 
 object SparkSpec {
