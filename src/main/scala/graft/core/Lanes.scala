@@ -29,21 +29,26 @@ object Lanes {
     math.max(1, math.min(jobs, spark.sparkContext.defaultParallelism / 2))
 
   /** Run `jobs` on [[count]] lanes and return their results in index
-    * order. Lanes take jobs in index order, so a job may block on the
-    * result of a job with a LOWER index (that job is already running or
-    * done) without deadlocking the bounded pool; it must never block on
-    * a higher one.
+    * order. Each job is a (label, body) pair; the label, a table name,
+    * is the Spark job description and call site of every Spark job the
+    * body starts, so logs and the Spark UI tell the tables apart.
+    *
+    * Lanes take jobs in index order, so a job may block on the result
+    * of a job with a LOWER index (that job is already running or done)
+    * without deadlocking the bounded pool; it must never block on a
+    * higher one.
     *
     * Lanes are daemon threads named `graft-stage-<lane>`, made
     * for this call and gone when it returns or throws. Each job runs
     * with the caller's active session and a copy of the caller's Spark
-    * local properties (job group, scheduler pool, description).
+    * local properties (job group, scheduler pool), with its label in
+    * place of the caller's description and call site.
     *
     * Failure: once a job throws, jobs not yet started are skipped; jobs
     * already in flight run to completion (their side effects stand);
     * then the first failure in index order is rethrown as thrown, not
     * wrapped. */
-  def run[T](spark: SparkSession, jobs: Seq[() => T]): Seq[T] = {
+  def run[T](spark: SparkSession, jobs: Seq[(String, () => T)]): Seq[T] = {
     val lanes = new ConcurrentLinkedQueue[Thread]
     val pool = Executors.newFixedThreadPool(count(spark, jobs.size), (r: Runnable) => {
       val t = new Thread(r, s"graft-stage-${lanes.size + 1}")
@@ -54,10 +59,19 @@ object Lanes {
     val failed = new AtomicBoolean
     try {
       val session = spark.asInstanceOf[classic.SparkSession]
-      val futures = jobs.map { job =>
+      val sc = spark.sparkContext
+      val futures = jobs.map { case (label, job) =>
         SQLExecution.withThreadLocalCaptured(session, pool) {
           if (failed.get) None
-          else try Some(job()) catch { case e: Throwable => failed.set(true); throw e }
+          else try {
+            sc.setJobDescription(label)
+            sc.setCallSite(label)
+            Some(job())
+          } catch { case e: Throwable => failed.set(true); throw e }
+          finally {
+            sc.setJobDescription(null)
+            sc.clearCallSite()
+          }
         }
       }
       val outcomes = futures.map { f =>

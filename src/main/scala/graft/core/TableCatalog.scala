@@ -8,6 +8,7 @@ import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Filesystem-backed table catalog.
   *
@@ -171,9 +172,9 @@ final class TableCatalog(val root: String,
     val promises = batches.map(_ => Promise[Path]())
     val stages = new ConcurrentLinkedQueue[Path]
     // Phase 1 — stage every batch OUTSIDE any lock (the expensive part).
-    val staged = try Lanes.run(spark, batches.zipWithIndex.map { case (b, i) => () =>
+    val staged = try Lanes.run(spark, batches.zipWithIndex.map { case (b, i) => b.name -> { () =>
       def resolver(n: String): DataFrame = index.get(n).filter(_ < i) match {
-        case Some(j) => spark.read.parquet(Await.result(promises(j).future, Duration.Inf).toString)
+        case Some(j) => readParquet(spark, Await.result(promises(j).future, Duration.Inf))
         case None => read(spark, n)
       }
       val dir = tableDir(b.name)
@@ -183,14 +184,12 @@ final class TableCatalog(val root: String,
         Files.createDirectories(dir)
         val (dfGen, genChecks) = applyGenerated(b.build(resolver), b.name)
         val (guarded, guard) = guardConstraints(dfGen, b.name, genChecks)
-        val w = guarded.write.mode("overwrite")
-        (if (b.partitionBy.nonEmpty) w.partitionBy(b.partitionBy: _*) else w)
-          .parquet(stage.toString)
+        writeParquet(guarded, stage, b.partitionBy)
         enforceConstraints(guard, b.name, stage)
       } catch { case e: Throwable => promises(i).failure(e); throw e }
       promises(i).success(stage)
       (b.name, dir, stage)
-    }) catch { case e: Throwable =>
+    }}) catch { case e: Throwable =>
       stages.forEach(s => scala.util.Try(deleteRecursively(s)))
       throw e
     }
@@ -228,8 +227,7 @@ final class TableCatalog(val root: String,
     def read(spark: SparkSession, name: String): DataFrame =
       pins.get(name).filter(v =>
           Files.isDirectory(tableDir(name).resolve(v))) match {
-        case Some(v) => applyTombstones(
-          spark.read.parquet(tableDir(name).resolve(v).toString), name)
+        case Some(v) => applyTombstones(readParquet(spark, tableDir(name).resolve(v)), name)
         case None => TableCatalog.this.read(spark, name)
       }
   }
@@ -237,7 +235,7 @@ final class TableCatalog(val root: String,
   def snapshot(): Snapshot = new Snapshot(multiCurrent())
 
   def read(spark: SparkSession, name: String): DataFrame =
-    applyTombstones(spark.read.parquet(currentPath(name)), name)
+    applyTombstones(readParquet(spark, Paths.get(currentPath(name))), name)
 
   // ------------------------------------------------- deletion vectors
   /** Parsed `_tombstones` sidecar rows: (keyCol, type tag, value). The
@@ -307,7 +305,10 @@ final class TableCatalog(val root: String,
 
   /** Per-version metadata: (version, isCurrent, nDataFiles, dataBytes,
     * sidecar names present). Driver-side directory walk, O(#files)
-    * metadata only — the audit/ops view behind `GRAFT DESCRIBE`. */
+    * metadata only — the audit/ops view behind `GRAFT DESCRIBE`. The
+    * sidecar list shows `_schema` (see [[writeParquet]]): a version
+    * without it was written before the catalog recorded schemas, or by
+    * another tool, and reads through schema inference. */
   def describe(name: String): Seq[(String, Boolean, Long, Long, Seq[String])] = {
     val cur = Paths.get(currentPath(name)).getFileName.toString
     versions(name).map { v =>
@@ -343,8 +344,7 @@ final class TableCatalog(val root: String,
     // deletion vectors are table-level: an erased subject is gone from
     // time travel too, immediately — logical erasure must not be
     // escapable by reading an older version
-    applyTombstones(
-      spark.read.parquet(tableDir(name).resolve(version).toString), name)
+    applyTombstones(readParquet(spark, tableDir(name).resolve(version)), name)
   }
 
   // ------------------------------------------- time travel AS OF time
@@ -571,8 +571,8 @@ final class TableCatalog(val root: String,
       require(Files.isRegularFile(p) && Files.size(p) == bytes,
         s"manifest file drifted or missing: $p (expected $bytes bytes)")
     }
-    spark.read.option("basePath", root)
-      .parquet(files.map { case (rel, _) => Paths.get(root, rel).toString }: _*)
+    readParquet(spark, Paths.get(root),
+      Some(files.map { case (rel, _) => Paths.get(root, rel).toString }))
   }
 
   // --------------------------------------------- CHECK constraints
@@ -812,6 +812,47 @@ final class TableCatalog(val root: String,
     dir.resolve(s".stage-${java.util.UUID.randomUUID().toString.take(12)}")
   }
 
+  // ------------------------------------------------ parquet I/O primitives
+  /** The catalog's one parquet write: `df` to `dir` (overwritten),
+    * through [[InProcessLocalFs]] so no file, `.crc` or directory forks a
+    * `chmod`. Then a `_schema` sidecar records the frame's schema minus
+    * the `partitionBy` columns, which reads keep discovering from the
+    * directory names, with the types inference gives them. When the
+    * write throws, `dir` is deleted before the failure propagates, so a
+    * failed stage never waits for the stale-stage sweep. */
+  private def writeParquet(df: DataFrame, dir: Path,
+      partitionBy: Seq[String] = Nil): Unit = {
+    val w = df.write.mode("overwrite").options(InProcessLocalFs.writeOptions)
+    try (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .parquet(dir.toString)
+    catch { case e: Throwable =>
+      if (Files.exists(dir)) scala.util.Try(deleteRecursively(dir))
+      throw e
+    }
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    Files.writeString(dir.resolve("_schema"), StructType(df.schema.filterNot(f =>
+      partitionBy.exists(resolver(_, f.name)))).json)
+  }
+
+  /** The catalog's one parquet read: the directory `dir` this catalog
+    * wrote, or `files` pruned from it (partition values resolve against
+    * `dir`), with the schema its `_schema` sidecar recorded, so no Spark
+    * job reads a footer to infer it. A version without the sidecar
+    * (written before the catalog recorded schemas, or by another tool)
+    * reads through inference. */
+  private def readParquet(spark: SparkSession, dir: Path,
+      files: Option[Seq[String]] = None): DataFrame = {
+    val sidecar = dir.resolve("_schema")
+    val r = if (!Files.isRegularFile(sidecar)) spark.read
+      else spark.read.schema(DataType.fromJson(Files.readString(sidecar)).asInstanceOf[StructType])
+    files match {
+      case None => r.parquet(dir.toString)
+      case Some(fs) =>
+        require(fs.nonEmpty, s"readParquet: empty file list under $dir")
+        r.option("basePath", dir.toString).parquet(fs: _*)
+    }
+  }
+
   /** Write `df` as the next version of `name` and atomically repoint.
     * Concurrency-safe: the batch lands in a staging dir first, then the
     * commit lock serializes slot claim + pointer swap, so simultaneous
@@ -835,9 +876,7 @@ final class TableCatalog(val root: String,
     val genChecks = if (validateGenerated) genChecks0 else Nil
     val (guarded, guard) = guardConstraints(dfGen, name, genChecks)
     val stage = newStageDir(dir)
-    val w = guarded.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(stage.toString)
+    writeParquet(guarded, stage, partitionBy)
     enforceConstraints(guard, name, stage)
     withCommitLock(dir) {
       val nextV = "v%06d".format(nextVersion(dir))
@@ -1003,7 +1042,7 @@ final class TableCatalog(val root: String,
       // base version there, so a batch another writer published between
       // our staging and our claim is carried in, never lost.
       val stage = newStageDir(dir)
-      guarded.write.mode("overwrite").parquet(stage.toString)
+      writeParquet(guarded, stage)
       // Constraint verdict BEFORE hardlink carry: a rejected batch
       // deletes only its own staged files, and the audit sidecar lands
       // next to the batch it describes.
@@ -1026,11 +1065,10 @@ final class TableCatalog(val root: String,
             .flatMap(s => scala.util.Try(s.toLong).toOption)
             .getOrElse(128L << 20)
           val parts = math.max(1, (batchBytes / targetBytes).toInt)
-          val batch = spark.read.parquet(stage.toString)
           val stage2 = newStageDir(dir)
-          graft.ops.Gold.clusterOnGrid(
-              batch, l.cols, l.bounds, l.bits, Some(parts), l.curve)
-            .write.mode("overwrite").parquet(stage2.toString)
+          try writeParquet(graft.ops.Gold.clusterOnGrid(readParquet(spark, stage),
+            l.cols, l.bounds, l.bits, Some(parts), l.curve), stage2)
+          catch { case e: Throwable => deleteRecursively(stage); throw e }
           deleteRecursively(stage)
           Files.move(stage2, stage, StandardCopyOption.ATOMIC_MOVE)
           l
@@ -1132,23 +1170,28 @@ final class TableCatalog(val root: String,
     // dropNames: manifest rows of files the new version REWRITES (an
     // incremental OPTIMIZE replaces the unclustered files) must not be
     // carried — their stats now describe files the version doesn't hold.
-    val prevManifest0 = spark.read.parquet(prevStats.toString)
+    val prevManifest0 = readParquet(spark, prevStats)
     val prevManifest =
       if (dropNames.isEmpty) prevManifest0
       else prevManifest0.filter(!col("_file").isin(dropNames: _*))
     val statsCols = prevManifest.columns.toSeq
       .collect { case c if c.startsWith("min_") => c.stripPrefix("min_") }
     if (statsCols.isEmpty || !statsCols.forall(df.columns.contains)) return
-    val batchStats = spark.read.parquet(batchFiles: _*)
-      .select(input_file_name().as("_file") +: statsCols.map(col): _*)
+    val batchStats = perFileMinMax(readParquet(spark, next, Some(batchFiles)), statsCols)
+    writeParquet(prevManifest.unionByName(batchStats).coalesce(1), next.resolve("_stats"))
+  }
+
+  /** One `_stats` manifest row per input file: its NAME (version dirs are
+    * flat, and names stay valid when the table root moves) and the
+    * min/max of every column in `statsCols`. */
+  private def perFileMinMax(d: DataFrame, statsCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions._
+    d.select(input_file_name().as("_file") +: statsCols.map(col): _*)
       .groupBy("_file")
       .agg(min(col(statsCols.head)).as(s"min_${statsCols.head}"),
         (statsCols.tail.map(c => min(col(c)).as(s"min_$c")) ++
           statsCols.map(c => max(col(c)).as(s"max_$c"))): _*)
       .withColumn("_file", element_at(split(col("_file"), "/"), -1))
-    prevManifest.unionByName(batchStats)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(next.resolve("_stats").toString)
   }
 
   /** Incremental `_bloom/<c>` maintenance on hardlink append, same
@@ -1167,7 +1210,7 @@ final class TableCatalog(val root: String,
     Option(bloomRoot.toFile.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).map(_.getName).sorted.foreach { c =>
         if (df.columns.contains(c)) {
-          val prevSidecar0 = spark.read.parquet(bloomRoot.resolve(c).toString)
+          val prevSidecar0 = readParquet(spark, bloomRoot.resolve(c))
           // dropNames: filters of rewritten files must not be carried
           // (see carryStatsIncremental) — the rewritten output gets
           // fresh filters below, built with the original sizing.
@@ -1177,7 +1220,7 @@ final class TableCatalog(val root: String,
           if (prevSidecar0.columns.contains("_items")) {
             val params = prevSidecar0.select("_items", "_fpp").head(1)
             if (params.nonEmpty)
-              buildBloomSidecar(spark, batchFiles, c,
+              buildBloomSidecar(readParquet(spark, next, Some(batchFiles)), c,
                 params.head.getLong(0), params.head.getDouble(1),
                 next.resolve("_bloom").resolve(c), carryFrom = Some(prevSidecar))
           }
@@ -1205,7 +1248,7 @@ final class TableCatalog(val root: String,
     // merge flows that need stronger isolation serialize at their level,
     // as ScopedScd2 documents.)
     val stage = newStageDir(dir)
-    guarded.write.mode("overwrite").partitionBy(partCol).parquet(stage.toString)
+    writeParquet(guarded, stage, Seq(partCol))
     // verdict before the untouched-partition carry, same as append
     enforceConstraints(guard, name, stage)
     val touchedDirs = touched.map(v => s"$partCol=$v").toSet
@@ -1314,21 +1357,10 @@ final class TableCatalog(val root: String,
     * versions only (clusterBy output is unpartitioned; partitioned
     * tables already skip via partition pruning). */
   def analyze(spark: SparkSession, name: String, statsCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions._
     require(statsCols.nonEmpty, "analyze: statsCols must be non-empty")
-    val cur = currentPath(name)
-    val d = spark.read.parquet(cur)
-    val perFile = d
-      .select(input_file_name().as("_file") +: statsCols.map(col): _*)
-      .groupBy("_file")
-      .agg(min(col(statsCols.head)).as(s"min_${statsCols.head}"),
-        (statsCols.tail.map(c => min(col(c)).as(s"min_$c")) ++
-          statsCols.map(c => max(col(c)).as(s"max_$c"))): _*)
-      // store the file NAME only — version dirs are flat, and names stay
-      // valid when the table root moves
-      .withColumn("_file", element_at(split(col("_file"), "/"), -1))
-    perFile.coalesce(1).write.mode("overwrite")
-      .parquet(Paths.get(cur, "_stats").toString)
+    val cur = Paths.get(currentPath(name))
+    writeParquet(perFileMinMax(readParquet(spark, cur), statsCols).coalesce(1),
+      cur.resolve("_stats"))
   }
 
   /** File paths of the current version whose [min, max] range for `c`
@@ -1343,7 +1375,7 @@ final class TableCatalog(val root: String,
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .map(_.getPath).toSeq
     if (!Files.isDirectory(statsDir)) return allFiles
-    val stats = spark.read.parquet(statsDir.toString)
+    val stats = readParquet(spark, statsDir)
     if (!stats.columns.contains(s"min_$c")) return allFiles
     // null min/max means the file has no non-null value of c — no row of
     // it can satisfy a range predicate, so the null-propagating
@@ -1363,10 +1395,16 @@ final class TableCatalog(val root: String,
     import org.apache.spark.sql.functions._
     val files = prunedFiles(spark, name, c, lo, hi)
     val base =
-      if (files.nonEmpty) applyTombstones(spark.read.parquet(files: _*), name)
+      if (files.nonEmpty) readPruned(spark, name, files)
       else read(spark, name).limit(0) // keep the schema, scan nothing
     base.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
   }
+
+  /** The data files a sidecar pruned from one (flat) version directory,
+    * with the table's deletion vectors applied. */
+  private def readPruned(spark: SparkSession, name: String,
+      files: Seq[String]): DataFrame =
+    applyTombstones(readParquet(spark, Paths.get(files.head).getParent, Some(files)), name)
 
   /** Build a per-file Bloom membership sidecar for `c` over the CURRENT
     * version (`_bloom/<c>` inside the version dir) — the point-lookup
@@ -1388,30 +1426,29 @@ final class TableCatalog(val root: String,
     * the sidecar is O(#files) rows. */
   def analyzeBloom(spark: SparkSession, name: String, c: String,
       expectedItemsPerFile: Long = 100000L, fpp: Double = 0.03): Unit =
-    buildBloomSidecar(spark, Seq(currentPath(name)), c,
+    buildBloomSidecar(readParquet(spark, Paths.get(currentPath(name))), c,
       expectedItemsPerFile, fpp,
       Paths.get(currentPath(name), "_bloom", c), carryFrom = None)
 
   /** Shared bloom sidecar builder: per-file membership filters for the
-    * files under `scanPaths`, optionally unioned with carried rows from
+    * files `scan` reads, optionally unioned with carried rows from
     * a previous sidecar (incremental append path). The build parameters
     * ride along as columns so an append can rebuild batch-file filters
     * with the SAME sizing as the original analyze. */
-  private def buildBloomSidecar(spark: SparkSession, scanPaths: Seq[String],
-      c: String, expectedItemsPerFile: Long, fpp: Double, outDir: Path,
+  private def buildBloomSidecar(scan: DataFrame, c: String,
+      expectedItemsPerFile: Long, fpp: Double, outDir: Path,
       carryFrom: Option[DataFrame]): Unit = {
     import org.apache.spark.sql.functions._
     val bloom = udaf(new graft.functions.BloomAgg(expectedItemsPerFile, fpp),
       org.apache.spark.sql.Encoders.STRING)
-    val fresh = spark.read.parquet(scanPaths: _*)
+    val fresh = scan
       .select(input_file_name().as("_file"), col(c).cast("string").as("_v"))
       .groupBy("_file")
       .agg(bloom(col("_v")).as("_bloom"))
       .withColumn("_file", element_at(split(col("_file"), "/"), -1))
       .withColumn("_items", lit(expectedItemsPerFile))
       .withColumn("_fpp", lit(fpp))
-    carryFrom.map(_.unionByName(fresh)).getOrElse(fresh)
-      .coalesce(1).write.mode("overwrite").parquet(outDir.toString)
+    writeParquet(carryFrom.map(_.unionByName(fresh)).getOrElse(fresh).coalesce(1), outDir)
   }
 
   /** Current-version files that might contain any of `values` in `c`
@@ -1443,7 +1480,7 @@ final class TableCatalog(val root: String,
       val bf = graft.functions.BloomAgg.deserialize(bytes)
       probes.exists(bf.mightContainString)
     }
-    spark.read.parquet(bloomDir.toString)
+    readParquet(spark, bloomDir)
       .filter(mightHit(org.apache.spark.sql.functions.col("_bloom")))
       .select("_file").collect().iterator
       .map(r => cur.resolve(r.getString(0)).toString).toSeq
@@ -1459,7 +1496,7 @@ final class TableCatalog(val root: String,
     import org.apache.spark.sql.functions._
     val files = bloomPrunedFiles(spark, name, c, values)
     val base =
-      if (files.nonEmpty) applyTombstones(spark.read.parquet(files: _*), name)
+      if (files.nonEmpty) readPruned(spark, name, files)
       else read(spark, name).limit(0) // keep the schema, scan nothing
     base.filter(col(c).isin(values: _*))
   }
@@ -1485,20 +1522,19 @@ final class TableCatalog(val root: String,
     import org.apache.spark.sql.functions._
     require(cols.nonEmpty, "analyzeNdv: cols must be non-empty")
     val cur = currentPath(name)
-    val d = spark.read.parquet(cur)
+    val d = readParquet(spark, Paths.get(cur))
     // xxhash64 → [0, 2^(p+w)) nonneg window the sketch requires; null
     // input propagates null, which the aggregate skips.
     def h(c: String) =
       when(col(c).isNotNull, pmod(xxhash64(col(c)), lit(1L << (p + w))))
     val aggs = cols.map(c =>
       graft.functions.HllSketch(h(c), p, w).as(s"hll_$c"))
-    d.select(input_file_name().as("_file") +: cols.map(col): _*)
+    writeParquet(d.select(input_file_name().as("_file") +: cols.map(col): _*)
       .groupBy("_file")
       .agg(count(lit(1)).as("_n"), aggs: _*)
       .withColumn("_file", element_at(split(col("_file"), "/"), -1))
       .withColumn("_p", lit(p)).withColumn("_w", lit(w))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(Paths.get(cur, "_ndv").toString)
+      .coalesce(1), Paths.get(cur, "_ndv"))
     // Plan-time summary beside the register sidecar: merged NDV per
     // column + exact row count + global min/max ranges as one tiny JSON
     // the optimizer ([[graft.plans.NdvStats]] for [[graft.plans.NdvBroadcastRule]]
@@ -1506,7 +1542,7 @@ final class TableCatalog(val root: String,
     // Spark jobs at plan time. Underscore-prefixed, so table scans skip
     // it; same lifecycle as `_ndv` (dies with the version).
     val est = ndvEstimate(spark, name, cols)
-    val nRows = spark.read.parquet(Paths.get(cur, "_ndv").toString)
+    val nRows = readParquet(spark, Paths.get(cur, "_ndv"))
       .agg(sum("_n")).head().getLong(0)
     // min/max for RANGE selectivity, on the numeric scale the plan-time
     // reader expects: numerics as doubles, dates as epoch DAYS (the same
@@ -1565,7 +1601,7 @@ final class TableCatalog(val root: String,
     import org.apache.spark.sql.functions._
     val dir = Paths.get(currentPath(name), "_ndv")
     if (!Files.isDirectory(dir)) return Map.empty
-    val sc = spark.read.parquet(dir.toString)
+    val sc = readParquet(spark, dir)
     val covered = cols.filter(c => sc.columns.contains(s"hll_$c"))
     if (covered.isEmpty) return Map.empty
     val first = sc.select("_p", "_w").head()
@@ -1600,25 +1636,20 @@ final class TableCatalog(val root: String,
     * rather than writing a sidecar that is itself big data. */
   def analyzeIndex(spark: SparkSession, name: String, c: String,
       maxDistinct: Long = 100000L): Unit = {
-    import org.apache.spark.sql.functions._
-    val cur = currentPath(name)
-    val postings = buildPostings(spark, Seq(cur), c)
+    val cur = Paths.get(currentPath(name))
+    val postings = buildPostings(readParquet(spark, cur), c)
     val n = postings.count()
     require(n <= maxDistinct,
       s"analyzeIndex: $name.$c has $n postings (> $maxDistinct) — " +
         "an exact index on a high-cardinality column is itself big data; " +
         "use analyzeBloom instead")
-    postings.coalesce(1).write.mode("overwrite")
-      .parquet(Paths.get(cur, "_index", c).toString)
+    writeParquet(postings.coalesce(1), cur.resolve("_index").resolve(c))
   }
 
-  private def buildPostings(spark: SparkSession, scanPaths: Seq[String],
-      c: String): DataFrame = {
+  private def buildPostings(scan: DataFrame, c: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.read.parquet(scanPaths: _*)
-      .select(element_at(split(input_file_name(), "/"), -1).as("_file"),
-        col(c).as("_value"))
-      .distinct()
+    scan.select(element_at(split(input_file_name(), "/"), -1).as("_file"),
+      col(c).as("_value")).distinct()
   }
 
   /** Exact file list for `c IN (values)` per the `_index` sidecar; None
@@ -1630,7 +1661,7 @@ final class TableCatalog(val root: String,
     val cur = Paths.get(currentPath(name))
     val idx = cur.resolve("_index").resolve(c)
     if (!Files.isDirectory(idx)) None
-    else Some(spark.read.parquet(idx.toString)
+    else Some(readParquet(spark, idx)
       .filter(col("_value").isin(values: _*))
       .select("_file").distinct()
       .collect().map(r => cur.resolve(r.getString(0)).toString).toSeq)
@@ -1648,7 +1679,7 @@ final class TableCatalog(val root: String,
       case None => scanPoints(spark, name, c, values)
       case Some(Nil) => read(spark, name).limit(0)
       case Some(files) =>
-        applyTombstones(spark.read.parquet(files: _*), name)
+        readPruned(spark, name, files)
           .filter(col(c).isin(values: _*))
     }
   }
@@ -1665,10 +1696,9 @@ final class TableCatalog(val root: String,
     Files.list(idxRoot).iterator().asScala.filter(Files.isDirectory(_))
       .foreach { colDir =>
         val c = colDir.getFileName.toString
-        val carried = spark.read.parquet(colDir.toString)
-        val fresh = buildPostings(spark, batchFiles, c)
-        carried.unionByName(fresh).coalesce(1).write.mode("overwrite")
-          .parquet(next.resolve("_index").resolve(c).toString)
+        val fresh = buildPostings(readParquet(spark, next, Some(batchFiles)), c)
+        writeParquet(readParquet(spark, colDir).unionByName(fresh).coalesce(1),
+          next.resolve("_index").resolve(c))
       }
   }
 
@@ -1864,14 +1894,12 @@ final class TableCatalog(val root: String,
       spark.conf.set(inferKey, "false")
       val kept =
         try {
-          val raw = spark.read.parquet(vDir.toString)
+          val raw = readParquet(spark, vDir)
           tombstoneFilter(name, raw.columns.toSet)
             .map(raw.filter).getOrElse(raw)
         } finally spark.conf.set(inferKey, inferPrev)
       val tmp = dir.resolve(s"$v.purging")
-      val w = kept.write.mode("overwrite")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-        .parquet(tmp.toString)
+      writeParquet(kept, tmp, partCols)
       // swap: stage the old dir out, then the rewrite in. A crash inside
       // the two-move window is repaired by the recovery block above on
       // the next rewrite attempt (the .stale dir is moved back), so no
@@ -2078,12 +2106,11 @@ final class TableCatalog(val root: String,
             .map(n => Files.size(prev.resolve(n))).sum
           val parts = partitions.getOrElse(
             math.max(1, (batchBytes / targetFileBytes).toInt))
-          val batch = spark.read.parquet(
-            unclustered.map(n => prev.resolve(n).toString): _*)
+          val batch = readParquet(spark, prev,
+            Some(unclustered.map(n => prev.resolve(n).toString)))
           val stage = newStageDir(dir)
-          graft.ops.Gold.clusterOnGrid(
-              batch, l.cols, l.bounds, l.bits, Some(parts), l.curve)
-            .write.mode("overwrite").parquet(stage.toString)
+          writeParquet(graft.ops.Gold.clusterOnGrid(
+            batch, l.cols, l.bounds, l.bits, Some(parts), l.curve), stage)
           var committed = -1
           withCommitLock(dir) {
             if (Paths.get(currentPath(name)) != prev) {

@@ -333,13 +333,6 @@ object Multimodal {
       chunk("IEND", Array.empty[Byte])
   }
 
-  // ImageIO's InputStream entry point defaults to a FILE-backed cache:
-  // every read() creates, fills and deletes a temp file — ~10 ms/image
-  // of filesystem churn for a 4 KB in-memory PNG (the r13 profile: the
-  // m_image_* family at 283 task-seconds for 15k decodes). Pure I/O
-  // plumbing, zero effect on decoded pixels.
-  javax.imageio.ImageIO.setUseCache(false)
-
   // Decoder scratch reuse: java.util.zip.Inflater allocates/frees a
   // native zlib stream per instance; one per decoded image is pure
   // overhead. Executor task threads are pooled, so thread-local reset()
@@ -533,7 +526,12 @@ object Multimodal {
           // Fallback keeps the original raster-sample arithmetic
           // verbatim (samples may exceed 8 bits here — e.g. 16-bit
           // gray — so it must NOT pack through a byte raster).
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
+          // An in-memory image stream: ImageIO's InputStream entry point
+          // caches the bytes in a temp file per image (created, filled,
+          // deleted) unless the JVM-wide ImageIO.setUseCache(false) is
+          // set, which a library must not change for its host.
+          val img = javax.imageio.ImageIO.read(new javax.imageio.stream
+            .MemoryCacheImageInputStream(new java.io.ByteArrayInputStream(png)))
           if (img == null || img.getWidth % 8 != 0 || img.getHeight % 8 != 0 ||
               img.getWidth == 0 || img.getHeight == 0) None
           else {

@@ -23,17 +23,20 @@ object Pipeline {
     Lanes.run(spark, bronzeCompanyHouseJobs(spark, conf, cat))
 
   private def bronzeCompanyHouseJobs(spark: SparkSession, conf: BronzeConf,
-      cat: TableCatalog): Seq[() => Unit] =
-    conf.tables.map { t => () =>
-      val glob = s"${conf.basePath}/*/*/${t.file}"
-      var df = Ingest.json(spark, SchemaRegistry.companiesHouse(t.name), glob)
-      df = Ingest.withPathIdentity(Ingest.withFilePath(df))
-      if (t.explode) {
-        val arrayCol = t.explodeColumn.getOrElse("items")
-        df = Ingest.explodeItems(df, arrayCol, Seq("company_number", "file_path"))
+      cat: TableCatalog): Seq[(String, () => Unit)] =
+    conf.tables.map { t =>
+      val name = s"${conf.catalog}.${conf.schema}.${t.name}"
+      name -> { () =>
+        val glob = s"${conf.basePath}/*/*/${t.file}"
+        var df = Ingest.json(spark, SchemaRegistry.companiesHouse(t.name), glob)
+        df = Ingest.withPathIdentity(Ingest.withFilePath(df))
+        if (t.explode) {
+          val arrayCol = t.explodeColumn.getOrElse("items")
+          df = Ingest.explodeItems(df, arrayCol, Seq("company_number", "file_path"))
+        }
+        df = Ingest.withAudit(df)
+        cat.overwrite(df, name)
       }
-      df = Ingest.withAudit(df)
-      cat.overwrite(df, s"${conf.catalog}.${conf.schema}.${t.name}")
     }
 
   /** Bronze YFinance: raw CSV → typed bronze tables
@@ -43,13 +46,16 @@ object Pipeline {
     Lanes.run(spark, bronzeYFinanceJobs(spark, conf, cat))
 
   private def bronzeYFinanceJobs(spark: SparkSession, conf: BronzeConf,
-      cat: TableCatalog): Seq[() => Unit] =
-    conf.tables.map { t => () =>
-      val glob = s"${conf.basePath}/${t.file}"
-      var df = Ingest.csv(spark, SchemaRegistry.yfinance(t.name), glob)
-      df = Ingest.withFilePath(df)
-      df = Ingest.cleanColumnNames(Ingest.withAudit(df))
-      cat.overwrite(df, s"${conf.catalog}.${conf.schema}.${t.name}")
+      cat: TableCatalog): Seq[(String, () => Unit)] =
+    conf.tables.map { t =>
+      val name = s"${conf.catalog}.${conf.schema}.${t.name}"
+      name -> { () =>
+        val glob = s"${conf.basePath}/${t.file}"
+        var df = Ingest.csv(spark, SchemaRegistry.yfinance(t.name), glob)
+        df = Ingest.withFilePath(df)
+        df = Ingest.cleanColumnNames(Ingest.withAudit(df))
+        cat.overwrite(df, name)
+      }
     }
 
   /** Silver company master (`medallion/silver/b2s_company_house.py:55-136`). */
@@ -62,9 +68,9 @@ object Pipeline {
     * catalog. */
   private def overwriteEach(spark: SparkSession, cat: TableCatalog,
       batches: Seq[TableCatalog.ChainedBatch]): Unit =
-    Lanes.run(spark, batches.map { b => () =>
+    Lanes.run(spark, batches.map { b => b.name -> { () =>
       cat.overwrite(b.build(n => cat.read(spark, n)), b.name, b.partitionBy)
-    })
+    }})
 
   private def silverCompanyMasterBatch(catalog: String, clock: Clock) =
     TableCatalog.ChainedBatch(s"$catalog.silver.company_master", read => {

@@ -155,6 +155,22 @@ class OpsSpec extends SparkSpec {
     assert(aHash64(Array.empty[Byte]).isEmpty)
   }
 
+  test("image decode fallback leaves the JVM-wide ImageIO cache setting alone") {
+    import javax.imageio.ImageIO
+    val rgb = new java.awt.image.BufferedImage(16, 16,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 16; x <- 0 until 16) rgb.setRGB(x, y, (x * 16 + y) << 8)
+    val bos = new java.io.ByteArrayOutputStream()
+    ImageIO.write(rgb, "png", bos)
+    val before = ImageIO.getUseCache
+    ImageIO.setUseCache(true)
+    try {
+      assert(graft.ext.Multimodal.decodeGray8Png(bos.toByteArray) == null) // not gray8
+      assert(graft.ext.Multimodal.aHash64(bos.toByteArray).isDefined) // ImageIO fallback
+      assert(ImageIO.getUseCache, "decoding changed ImageIO.getUseCache")
+    } finally ImageIO.setUseCache(before)
+  }
+
   test("gray8 PNG fast path: pixel-identical to ImageIO across all five filters") {
     import graft.ext.Multimodal.{aHash64, decodeGray8Png}
     // Hand-assemble a gray8 PNG with a CHOSEN per-scanline filter type —

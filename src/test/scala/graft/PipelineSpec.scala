@@ -314,8 +314,9 @@ class PipelineSpec extends SparkSpec {
         snap.read(spark, "companies.silver.trading_data")))))
   }
 
-  test("staging lanes: none outlives Pipeline.run; a failed bronze table never starts silver or gold") {
-    val root = Files.createTempDirectory("graft-lanes")
+  /** One company, one trading day: the smallest raw zone every layer of
+    * [[Pipeline.run]] writes from, as (bronze CH, bronze YF, silver, gold). */
+  private def oneCompanyZone(root: Path): (BronzeConf, BronzeConf, SilverConf, GoldConf) = {
     val ch = root.resolve("raw/companies_house")
     val co = ch.resolve("ingestion_date=2026-01-01/00000001")
     write(co.resolve("overview.json"),
@@ -341,7 +342,12 @@ class PipelineSpec extends SparkSpec {
     val goldConf = GoldConf("companies", "silver", "gold",
       promoteTables = Seq("company_master"), dimensions = Nil,
       facts = Seq(FactConf("fact_trading", "trading_data", "date", Nil)))
+    (bronzeCh, bronzeYf, silverYf, goldConf)
+  }
 
+  test("staging lanes: none outlives Pipeline.run; a failed bronze table never starts silver or gold") {
+    val root = Files.createTempDirectory("graft-lanes")
+    val (bronzeCh, bronzeYf, silverYf, goldConf) = oneCompanyZone(root)
     val cat = new TableCatalog(root.resolve("warehouse").toString)
     Pipeline.run(spark, bronzeCh, bronzeYf, silverYf, goldConf, cat, Clock.fixed("2026-01-10"))
     assert(cat.read(spark, "companies.gold.fact_trading").count() == 1L)
@@ -360,6 +366,40 @@ class PipelineSpec extends SparkSpec {
     assert(!failed.exists("companies.bronze.overview"))
     assert(failed.listTables().forall(_.startsWith("companies.bronze.")),
       s"silver/gold started: ${failed.listTables()}")
+  }
+
+  test("lane jobs carry their table as job description and call site") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft-labels")
+    val (bronzeCh, bronzeYf, silverYf, goldConf) = oneCompanyZone(root)
+    val cat = new TableCatalog(root.resolve("warehouse").toString)
+    // (description, call site, stage names) of every job the run starts
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Seq[String])]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add((
+        e.properties.getProperty("spark.job.description"),
+        e.properties.getProperty("callSite.short"),
+        e.stageInfos.map(_.name)))
+    }
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipeline.run(spark, bronzeCh, bronzeYf, silverYf, goldConf, cat, Clock.fixed("2026-01-10"))
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val tables = cat.listTables().toSet
+    assert(tables.size == 8, tables)
+    val seen = jobs.asScala.toSeq
+    assert(seen.nonEmpty)
+    seen.foreach { case (desc, site, stages) =>
+      assert(tables.contains(desc), s"job labelled '$desc' (call site '$site')")
+      assert(site == desc, s"call site '$site' for table $desc")
+      assert(!stages.exists(_.contains("withThreadLocalCaptured")), stages)
+    }
+    assert(seen.map(_._1).toSet == tables, "every table's lane starts a labelled job")
+    // the label does not outlive the lane: the caller's properties are clean
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
   }
 
   test("compaction rewrites many small files into few, content intact") {
