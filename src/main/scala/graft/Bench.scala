@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main (driver contract): one JSON line with
   * per-query wall seconds over SPARK_GRAFT_SF_DIR.
@@ -12,20 +11,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // Session-catalog resolved-frame cache (Parity.table scaladoc) —
-      // on by default like any engine catalog; the env toggle exists so
-      // its effect stays A/B-measurable on identical binaries.
-      .config("spark.graft.tableCache",
-        sys.env.getOrElse("SPARK_GRAFT_TABLE_CACHE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Session-catalog resolved-frame cache (Parity.table scaladoc) —
+    // on by default like any engine catalog; the env toggle exists so
+    // its effect stays A/B-measurable on identical binaries.
+    val spark = graft.core.Sessions.local(cpus.toInt, extraConf = Map(
+      "spark.graft.tableCache" -> sys.env.getOrElse("SPARK_GRAFT_TABLE_CACHE", "true")))
     // Untimed warmup: JIT/codegen/session/parquet-reader init and the
     // cold first read of every table should not bill the first measured
     // query (alphabetical order made a1_aggregates absorb the whole

@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the engine.
+/** Session factory for the engine: every main builds its session here.
   *
   * Mirrors the capability of the reference's session factory
   * (`utils/sparksession.py:3-12`) but fixes its misspelled AQE key
@@ -10,41 +10,31 @@ import org.apache.spark.sql.SparkSession
   * SURVEY.md §4) and sizes shuffle partitions for the actual runtime
   * instead of a hard-coded 200.
   *
-  * Scale posture: AQE on (runtime coalescing, skew-join splitting,
-  * broadcast demotion), UTC session time zone for reproducible
-  * date/timestamp semantics, and shuffle partitions defaulting to the
-  * local core count (on a real cluster, callers pass ~2-3× total cores).
+  * Scale posture: AQE on, UTC session time zone for reproducible
+  * date/timestamp semantics, and shuffle partitions = the local core
+  * count (on a real cluster, see [[clusterConf]]). AQE coalescing,
+  * skew-join splitting and parquet filter pushdown are Spark defaults
+  * and stay unset, so `spark.conf.getAll` lists only the keys set here.
+  * No app name is set, so Spark generates one per run.
   */
 object Sessions {
 
+  /** A `local[cores]` session; `cores` defaults to `SPARK_GRAFT_CPUS`
+    * (32 when unset), the core count the mains run with. */
   def local(
-      cores: Int = Runtime.getRuntime.availableProcessors(),
-      shufflePartitions: Option[Int] = None,
-      appName: String = "graft",
+      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
       extraConf: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession
       .builder()
       .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cores).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.filterPushdown", "true")
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.ui.enabled", "false")
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Tune an externally-provided session (e.g. the driver harness's) with
-    * the engine's semantics-critical confs without rebuilding it. */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
   }
 

@@ -823,15 +823,38 @@ final class TableCatalog(val root: String,
   private def writeParquet(df: DataFrame, dir: Path,
       partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.mode("overwrite").options(InProcessLocalFs.writeOptions)
+    val sc = df.sparkSession.sparkContext
+    val tag = s"graft-write-${java.util.UUID.randomUUID}"
+    sc.addJobTag(tag)
     try (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(dir.toString)
     catch { case e: Throwable =>
+      // A failed job returns while its other tasks may still run (a cancel
+      // does not interrupt them), and one of them can recreate part of the
+      // dir after the delete: wait for them to end first.
+      awaitTasksEnded(df.sparkSession, tag)
       if (Files.exists(dir)) scala.util.Try(deleteRecursively(dir))
       throw e
-    }
+    } finally sc.removeJobTag(tag)
     val resolver = df.sparkSession.sessionState.conf.resolver
     Files.writeString(dir.resolve("_schema"), StructType(df.schema.filterNot(f =>
       partitionBy.exists(resolver(_, f.name)))).json)
+  }
+
+  /** Block until no task of the jobs tagged `tag` is running, as the
+    * status store sees it; bounded, so a stuck task cannot hang the caller. */
+  private def awaitTasksEnded(spark: SparkSession, tag: String,
+      timeoutMs: Long = 30000L): Unit = {
+    val tracker = spark.sparkContext.statusTracker
+    def running: Int = tracker.getJobIdsForTag(tag).iterator
+      .flatMap(j => tracker.getJobInfo(j).iterator).flatMap(_.stageIds)
+      .flatMap(s => tracker.getStageInfo(s).iterator).map(_.numActiveTasks).sum
+    val deadline = System.currentTimeMillis() + timeoutMs
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+    while (running > 0 && System.currentTimeMillis() < deadline) {
+      Thread.sleep(10)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+    }
   }
 
   /** The catalog's one parquet read: the directory `dir` this catalog
@@ -1245,8 +1268,8 @@ final class TableCatalog(val root: String,
     // append/merge to other partitions isn't lost. (Writes racing on the
     // SAME partitions remain last-wins: the rewritten content is computed
     // by the caller from an earlier read, which the lock can't rewind —
-    // merge flows that need stronger isolation serialize at their level,
-    // as ScopedScd2 documents.)
+    // a read-merge-rewrite flow that needs stronger isolation must
+    // serialize its writers itself.)
     val stage = newStageDir(dir)
     writeParquet(guarded, stage, Seq(partCol))
     // verdict before the untouched-partition carry, same as append

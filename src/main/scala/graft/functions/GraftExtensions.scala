@@ -1,32 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** SparkSessionExtensions injector: registers the engine's native SQL
-  * functions. Activate with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * (done by `core.Sessions`, `Verify` and `Bench`), or at runtime via
-  * [[GraftExtensions.register]] for an externally-built session.
+  * functions, optimizer rules and the `GRAFT` command parser. Activate
+  * with `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
+  * (done by `core.Sessions`), or register the functions at runtime via
+  * [[GraftExtensions.register]] for an externally-built session. The
+  * native join strategies are not injected here: `AsOf.joinBackwardNative`
+  * and `RangeJoin.nativeJoin` install theirs where they build their node.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(PolyHash.registration)
-    ext.injectFunction(DotProduct.registration)
-    ext.injectFunction(InterleaveBits.registration)
-    ext.injectFunction(HilbertIndex.registration)
-    ext.injectFunction(MinHashSig.registration)
-    ext.injectFunction(SimHashSig.registration)
-    ext.injectFunction(GramHashes.registration)
-    ext.injectFunction(WordShingles.registration)
-    ext.injectFunction(LshBucket.registration)
-    ext.injectFunction(AdcScore.registration)
-    ext.injectFunction(SlidingMin.registration)
-    ext.injectFunction(KmvSketch.registration)
-    ext.injectFunction(CmsSketch.registration)
-    ext.injectFunction(HllSketch.registration)
-    ext.injectFunction(JaroWinkler.registration)
-    ext.injectTableFunction(DateSpine.registration)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    GraftExtensions.tableFunctions.foreach(ext.injectTableFunction)
     ext.injectOptimizerRule(graft.plans.MvRewriteRule)
     // Order matters: the reorder rule matches hint-free joins, so it
     // must see the plan before NdvBroadcastRule decorates it — in one
@@ -40,21 +27,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  /** The `graft_*` scalar and aggregate functions, for both routes. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    PolyHash.registration, DotProduct.registration,
+    InterleaveBits.registration, HilbertIndex.registration,
+    MinHashSig.registration, SimHashSig.registration,
+    GramHashes.registration, WordShingles.registration,
+    LshBucket.registration, AdcScore.registration,
+    SlidingMin.registration,
+    KmvSketch.registration, CmsSketch.registration,
+    HllSketch.registration, JaroWinkler.registration)
+
+  /** The `graft_*` table functions, for both routes. */
+  val tableFunctions: Seq[SparkSessionExtensions#TableFunctionDescription] =
+    Seq(DateSpine.registration)
+
   /** Post-hoc registration on an already-built session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    Seq(PolyHash.registration, DotProduct.registration,
-        InterleaveBits.registration, HilbertIndex.registration,
-        MinHashSig.registration, SimHashSig.registration,
-        GramHashes.registration, WordShingles.registration,
-        LshBucket.registration, AdcScore.registration,
-        SlidingMin.registration,
-        KmvSketch.registration, CmsSketch.registration,
-        HllSketch.registration, JaroWinkler.registration).foreach { r =>
-      reg.registerFunction(r._1, r._2, r._3)
-    }
+    functions.foreach { case (id, info, builder) => reg.registerFunction(id, info, builder) }
     val treg = spark.sessionState.tableFunctionRegistry
-    val t = DateSpine.registration
-    treg.registerFunction(t._1, t._2, t._3)
+    tableFunctions.foreach { case (id, info, builder) => treg.registerFunction(id, info, builder) }
   }
 }

@@ -10,10 +10,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StringType, StructType}
 
-/** SQL surface for the catalog's maintenance operations — the
-  * `injectParser` extension point, completing the engine's use of every
-  * `SparkSessionExtensions` hook (functions, optimizer rule, planner
-  * strategy, DSv2 source/sink, and now parser):
+/** SQL surface for the catalog's maintenance operations, through the
+  * `injectParser` extension point (beside the functions and optimizer
+  * rules `GraftExtensions` injects):
   *
   * {{{
   *   GRAFT VERSIONS <table>                   -- tags + current marker

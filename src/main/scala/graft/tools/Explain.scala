@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Dev tool: dump `explain("formatted")` for selected queries (all by
   * default) so plan regressions — lost pushdown, missed broadcast,
@@ -11,16 +11,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the production session's extensions — without them the dumped
-      // plans omit the injected optimizer rules (join reorder, ndv
-      // broadcast, MV rewrite) and misstate what Verify/Bench execute
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the production session (extensions included) — without them the
+    // dumped plans omit the injected optimizer rules (join reorder, ndv
+    // broadcast, MV rewrite) and misstate what Verify/Bench execute
+    val spark = Sessions.local(cores = 4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n======== $n ========")

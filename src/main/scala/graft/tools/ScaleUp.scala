@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: weak-scaling fixture generator. Replicates the sf0.1
@@ -74,15 +73,7 @@ object ScaleUp {
       when(bucket < 100, lit(0L)).when(bucket < 150, lit(1L))
         .when(bucket < 175, lit(2L)).otherwise(base)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
 
     val off = 100000000L // beyond any real id/key in the source tables
     val ev = graft.queries.Parity.events(spark, src)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Dev tool: wall-time selected queries through the noop sink (Bench
   * methodology, min of `SPARK_GRAFT_PASSES` passes) without running the
@@ -12,19 +12,7 @@ object TimeQ {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else Seq("a1_aggregates")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Probe knob: override shuffle partitions independently of the core
-    // count (loop-partition headroom experiments; Bench never reads it).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     spark.range(100000).selectExpr("sum(id * 2)")
       .write.format("noop").mode("overwrite").save()
     names.foreach { n =>

@@ -183,4 +183,44 @@ class CatalogIoSpec extends SparkSpec {
     assert(cat.read(spark, t).orderBy("id").as[(Long, String)].collect().toSeq ==
       Seq((1L, "a"), (2L, "b")))
   }
+
+  test("overwritePartitions rewrites touched partitions and hardlinks the rest") {
+    val cat = freshCatalog("scoped")
+    val t = "io.s.scoped"
+    val initial = (1 to 40).map(i => (i.toLong, s"v$i", i % 4)).toDF("id", "v", "p")
+    cat.overwrite(initial, t, Seq("p"))
+    def fileKeys(version: String): Map[String, Object] = {
+      val dir = Path.of(version)
+      val walk = Files.walk(dir)
+      try walk.iterator.asScala
+        .filter(f => Files.isRegularFile(f) && f.toString.endsWith(".parquet"))
+        .map(f => dir.relativize(f).toString -> Files.getAttribute(f, "unix:fileKey"))
+        .toMap
+      finally walk.close()
+    }
+    val v1 = cat.currentPath(t)
+    val before = fileKeys(v1)
+    // partitions 1 and 3 are replaced wholesale: 1 by new content, 3 by
+    // nothing (an empty touched partition drops its rows)
+    val rewritten = Seq((101L, "new", 1), (102L, "new", 1)).toDF("id", "v", "p")
+    cat.overwritePartitions(rewritten, t, "p", Seq(1, 3))
+    val v2 = cat.currentPath(t)
+    assert(v2 != v1)
+    val after = fileKeys(v2)
+    def in(keys: Map[String, Object], part: Int) =
+      keys.filter(_._1.startsWith(s"p=$part/"))
+    for (p <- Seq(0, 2)) {
+      assert(in(before, p).nonEmpty, s"fixture has no files in p=$p")
+      assert(in(after, p) == in(before, p), s"p=$p was rewritten, not hardlinked")
+    }
+    assert(in(after, 1).nonEmpty, "touched partition p=1 lost its new rows")
+    assert(in(after, 1).values.toSet.intersect(in(before, 1).values.toSet).isEmpty,
+      "touched partition p=1 kept an old file")
+    assert(in(after, 3).isEmpty, "touched partition p=3 kept an old file")
+    val expected = initial.filter(col("p").isin(0, 2)).union(rewritten)
+    // the cast: partition type inference is a session conf other suites set
+    def rows(df: DataFrame) = df.select(col("id"), col("v"), col("p").cast("int"))
+      .as[(Long, String, Int)].collect().sorted.toSeq
+    assert(rows(cat.read(spark, t)) == rows(expected))
+  }
 }

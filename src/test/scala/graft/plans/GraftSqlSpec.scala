@@ -6,13 +6,15 @@ import org.apache.spark.sql.classic.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GRAFT SQL command surface ([[GraftSqlParser]], `injectParser`).
-  * Builds its own session: a parser can only be injected at
-  * session-build time via `spark.sql.extensions`, unlike the optimizer
-  * rule / strategy which the other suites attach post-hoc to
-  * `SparkSpec`'s shared session. Suites run sequentially in the forked
-  * test JVM, so temporarily swapping the default session is safe; the
-  * previous default is restored in afterAll. */
+/** The SQL surface [[graft.functions.GraftExtensions]] injects: the GRAFT
+  * command parser ([[GraftSqlParser]], `injectParser`) and the `graft_*`
+  * function list. Builds its own session: a parser can only be injected
+  * at session-build time via `spark.sql.extensions`, unlike the
+  * functions, optimizer rules and strategies which the other suites
+  * attach post-hoc to `SparkSpec`'s shared session. Suites run
+  * sequentially in the forked test JVM, so temporarily swapping the
+  * default session is safe; the previous default is restored in
+  * afterAll. */
 class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var shared: SparkSession = _
   private var sess: SparkSession = _
@@ -46,6 +48,22 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.clearActiveSession()
     SparkSession.setDefaultSession(shared)
     SparkSession.setActiveSession(shared)
+  }
+
+  test("both registration routes register exactly the one function list") {
+    import graft.functions.GraftExtensions
+    def graftNames(names: Seq[org.apache.spark.sql.catalyst.FunctionIdentifier]) =
+      names.map(_.funcName).filter(_.startsWith("graft_")).sorted
+    def listed(s: SparkSession) = (
+      graftNames(s.sessionState.functionRegistry.listFunction()),
+      graftNames(s.sessionState.tableFunctionRegistry.listFunction()))
+    val expected = (
+      GraftExtensions.functions.map(_._1.funcName).sorted,
+      GraftExtensions.tableFunctions.map(_._1.funcName).sorted)
+    assert(expected._1.nonEmpty && expected._2.nonEmpty)
+    assert(listed(sess) == expected, "injected route (GraftExtensions.apply)")
+    GraftExtensions.register(shared)
+    assert(listed(shared) == expected, "post-hoc route (GraftExtensions.register)")
   }
 
   private def cat(): TableCatalog = {

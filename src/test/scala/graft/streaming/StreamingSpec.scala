@@ -247,71 +247,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming near-dup gate matches arriving docs against the corpus index") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "the quick brown fox jumps over the lazy dog again and again today"
-    val unrelated = "completely different words appear within this other sentence entirely now ok"
-    val corpus = graft.ext.Dedup.signatureIndex(
-      Seq((0L, base), (2L, unrelated)).toDF("doc_id", "text"))
-    val mem = MemoryStream[(Long, String)]
-    val q = DocStreams.nearDupMatches(
-        mem.toDF().toDF("doc_id", "text"), corpus, 0.7)
-      .writeStream.format("memory").queryName("neardup_gate")
-      .outputMode("append").start()
-    try {
-      mem.addData((10L, base.replace("today", "tomorrow")), // near-dup of 0
-        (11L, "some wholly novel document nobody has ever ingested before"))
-      q.processAllAvailable()
-      mem.addData((12L, unrelated)) // exact dup of 2, later batch
-      q.processAllAvailable()
-      val got = spark.table("neardup_gate")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(got.map(m => (m._1, m._2)).toSet == Set((10L, 0L), (12L, 2L)),
-        s"got ${got.toSeq}")
-      // a match row per pair, even though the pair shares many LSH bands
-      assert(got.length == 2, s"pair emitted more than once: ${got.toSeq}")
-      assert(got.find(_._1 == 12L).get._3 == 1.0) // exact dup
-    } finally q.stop()
-  }
-
-  test("dedupIngestSink keeps novel docs and grows its own index across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val cat = new graft.core.TableCatalog(
-      java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("target"), "dedup-ingest-").toString)
-    val a = "the quick brown fox jumps over the lazy dog again and again today"
-    val b = "completely different words appear within this other sentence entirely now ok"
-    val c = "a third wholly original document with its very own particular vocabulary set"
-    val mem = MemoryStream[(Long, String)]
-    val q = DocStreams.dedupIngestSink(mem.toDF().toDF("doc_id", "text"),
-      cat, "ing.docs", "ing.index", appId = "dedup-ingest-spec", threshold = 0.7)
-    try {
-      // batch 0: two novel docs + an intra-batch near-dup of doc 1
-      mem.addData((1L, a), (2L, b), (3L, a.replace("today", "tomorrow")))
-      q.processAllAvailable()
-      assert(cat.read(spark, "ing.docs").select("doc_id").collect()
-        .map(_.getLong(0)).toSet == Set(1L, 2L),
-        "intra-batch chain must keep only the min-id member")
-      // batch 1: cross-batch near-dup of doc 2 (caught via the index the
-      // sink itself appended) + one novel doc
-      mem.addData((10L, b.replace("ok", "yes")), (11L, c))
-      q.processAllAvailable()
-      val docs = cat.read(spark, "ing.docs").select("doc_id").collect()
-        .map(_.getLong(0)).toSet
-      assert(docs == Set(1L, 2L, 11L), s"got $docs")
-      // index covers exactly the admitted docs — batch N+1 dedups
-      // against batch N with no corpus re-shingling
-      val idx = cat.read(spark, "ing.index").select("doc_id").collect()
-        .map(_.getLong(0)).toSet
-      assert(idx == Set(1L, 2L, 11L), s"index $idx")
-      // exactly-once ledger: both tables carry the stream's app id
-      assert(cat.txns("ing.docs").exists(_._1 == "dedup-ingest-spec"))
-      assert(cat.txns("ing.index").exists(_._1 == "dedup-ingest-spec"))
-    } finally q.stop()
-  }
-
   test("mvRefreshSink maintains a summary across micro-batches (streaming IVM)") {
     import graft.plans.MaterializedViews
     import spark.implicits._
@@ -527,33 +462,6 @@ class StreamingSpec extends SparkSpec {
     assert(out(0).getAs[Long]("n") == 2 && out(0).getAs[Double]("sum_value") == 0.3
       && out(0).getAs[Long]("sum_k") == 5)
     assert(out(1).getAs[Long]("n") == 1 && out(1).getAs[Long]("sum_k") == 4)
-  }
-
-  test("streaming budget admission enforces per-source token quota across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    def doc(n: Int) = Seq.fill(n)("w").mkString(" ") // n tokens
-    val mem = MemoryStream[(Long, String, String)]
-    val q = DocStreams.budgetAdmission(
-        mem.toDF().toDF("doc_id", "source", "text"), budgetPerSource = 25L)
-      .writeStream.format("memory").queryName("budget_gate")
-      .outputMode("append").start()
-    try {
-      // Batch 1: srcA gets 10+10 = 20 of 25; srcB gets 10.
-      mem.addData((1L, "srcA", doc(10)), (2L, "srcA", doc(10)), (3L, "srcB", doc(10)))
-      q.processAllAvailable()
-      // Batch 2: srcA has 5 left — the 10-token doc is over quota and
-      // drops, the later 5-token doc still fits (best-effort packing).
-      mem.addData((4L, "srcA", doc(10)), (5L, "srcA", doc(5)), (6L, "srcB", doc(10)))
-      q.processAllAvailable()
-      val got = spark.table("budget_gate").as[DocStreams.AdmittedDoc].collect()
-      val byId = got.map(d => d.doc_id -> d).toMap
-      assert(byId.keySet == Set(1L, 2L, 3L, 5L, 6L), s"got ${got.toSeq}")
-      assert(byId(5L).cum_tokens == 25L, "srcA state carried across batches")
-      assert(byId(6L).cum_tokens == 20L)
-      assert(got.filter(_.source == "srcA").map(_.n_tokens).sum <= 25L)
-    } finally q.stop()
   }
 
   test("streaming appendSink keeps a curve-laid-out table clustered batch over batch") {
