@@ -40,9 +40,13 @@ object Lanes {
     *
     * Lanes are daemon threads named `graft-stage-<lane>`, made
     * for this call and gone when it returns or throws. Each job runs
-    * with the caller's active session and a copy of the caller's Spark
-    * local properties (job group, scheduler pool), with its label in
-    * place of the caller's description and call site.
+    * with `spark` as its active session and a copy of the caller's
+    * Spark local properties (job group, scheduler pool), with its label
+    * in place of the caller's description and call site. `spark` need
+    * not be the caller's active session: a pipeline call passes the
+    * session it picked for its input size ([[Sessions.forInput]]), so
+    * that every frame its jobs plan, including ones a job builds without
+    * naming a session, belongs to that one session.
     *
     * Failure: once a job throws, jobs not yet started are skipped; jobs
     * already in flight run to completion (their side effects stand);

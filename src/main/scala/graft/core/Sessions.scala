@@ -38,6 +38,38 @@ object Sessions {
     spark
   }
 
+  /** Input bytes below which a pipeline call runs interpreted (see
+    * [[forInput]]). Set from a crossover of the medallion load and day,
+    * interpreted against codegen, on a 4-core host (SURVEY.md §7.4):
+    * interpreted won every pair up to 1.0 MB of input, and codegen first
+    * tied a pair at 2.6 MB. The bound sits between the two. */
+  val interpretedBelowBytes: Long = 2L << 20
+
+  /** The session a pipeline call of `inputBytes` input runs on.
+    *
+    * At or above [[interpretedBelowBytes]] it is `spark` itself. Below
+    * it, it is an interpreted clone of `spark`: whole-stage codegen off
+    * and the expression factories on their interpreted implementations
+    * (`factoryMode=NO_CODEGEN`, the internal key Spark's own
+    * interpreted-plan tests use). On a small batch, compiling a plan
+    * costs more than running it: a medallion day over the benchmark's
+    * raw zone compiled about 140 classes with Janino, and interpreted it
+    * took half the task-seconds. Turning off only whole-stage codegen is
+    * not enough, since each expression then compiles on its own.
+    *
+    * A clone, not `spark` with two keys set, because the caller's conf
+    * must not change under it: the clone keeps the caller's runtime
+    * conf, listeners, extensions and `graft_*` functions, and differs
+    * from it only in the two keys. */
+  def forInput(spark: SparkSession, inputBytes: Long): SparkSession =
+    if (inputBytes >= interpretedBelowBytes) spark
+    else {
+      val clone = org.apache.spark.sql.graft.Bridge.cloneSession(spark)
+      clone.conf.set("spark.sql.codegen.wholeStage", "false")
+      clone.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      clone
+    }
+
   /** Shuffle-sizing posture for a REAL cluster (the 1000-executor /
     * 100 TB deployment this library is designed for) — the conf block a
     * cluster session should be built with, also applicable to a live

@@ -143,6 +143,10 @@ final class TableCatalog(val root: String,
     * staged LATER in the transaction, resolves through the live catalog
     * (e.g. an SCD2 merge base = pre-transaction state).
     *
+    * Every staged read and every lane runs on `spark`, so a caller that
+    * picked a session for the transaction (see [[Sessions.forInput]])
+    * plans all of it on that session.
+    *
     * Phase 1 stages the batches concurrently on [[Lanes]] (lane count
     * `max(1, min(batches, defaultParallelism / 2))`), taken in batch
     * order. Every batch has a promise of its staged directory; a
@@ -313,27 +317,44 @@ final class TableCatalog(val root: String,
     val cur = Paths.get(currentPath(name)).getFileName.toString
     versions(name).map { v =>
       val dir = tableDir(name).resolve(v)
-      // recurse: partitioned versions keep data files under col=value
-      // subdirs, which a flat listing reported as 0 files / 0 bytes.
-      // Any _-prefixed path segment (sidecar dirs, _SUCCESS, a crashed
-      // write's _temporary) excludes the file from the data census.
-      var nFiles = 0L
-      var bytes = 0L
-      val walk = Files.walk(dir)
-      try walk.filter(Files.isRegularFile(_)).forEach { f =>
-        val rel = dir.relativize(f)
-        val hidden = (0 until rel.getNameCount).exists { i =>
-          val n = rel.getName(i).toString
-          n.startsWith("_") || n.startsWith(".")
-        }
-        if (!hidden) { nFiles += 1; bytes += Files.size(f) }
-      } finally walk.close()
+      val (nFiles, bytes) = census(dir)
       // sidecars: metadata artifacts only — job markers are noise here
       val sidecars = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
         .filter(f => f.getName.startsWith("_") && f.getName != "_SUCCESS")
         .map(_.getName).sorted.toSeq
       (v, v == cur, nFiles, bytes, sidecars)
     }
+  }
+
+  /** Data bytes of `name`'s current version (0 when the table does not
+    * exist), counted by [[census]] and stopped once they exceed `limit`:
+    * the size of a table as a reader of it will scan it, from metadata
+    * alone, with no Spark job. */
+  def currentBytes(name: String, limit: Long): Long =
+    if (!exists(name)) 0L else census(Paths.get(currentPath(name)), limit)._2
+
+  /** The data census of one version dir: (data files, data bytes). It
+    * recurses, because partitioned versions keep data files under
+    * col=value subdirs. Any _- or .-prefixed path segment (sidecar dirs,
+    * `_SUCCESS`, a crashed write's `_temporary`) excludes the file. The
+    * walk stops once the bytes exceed `limit`. */
+  private def census(dir: Path, limit: Long = Long.MaxValue): (Long, Long) = {
+    var nFiles = 0L
+    var bytes = 0L
+    val walk = Files.walk(dir)
+    try {
+      val files = walk.filter(Files.isRegularFile(_)).iterator
+      while (bytes <= limit && files.hasNext) {
+        val f = files.next()
+        val rel = dir.relativize(f)
+        val hidden = (0 until rel.getNameCount).exists { i =>
+          val n = rel.getName(i).toString
+          n.startsWith("_") || n.startsWith(".")
+        }
+        if (!hidden) { nFiles += 1; bytes += Files.size(f) }
+      }
+    } finally walk.close()
+    (nFiles, bytes)
   }
 
   /** Time travel: read a specific retained version (as-of-write state —

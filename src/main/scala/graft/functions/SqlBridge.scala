@@ -24,6 +24,14 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A clone of `spark` on the same SparkContext and shared state, with
+    * its own copy of the session state: runtime conf, registered
+    * functions (the `graft_*` ones included), query execution listeners,
+    * extensions and extra strategies. Conf set on the clone leaves
+    * `spark` untouched (`cloneSession` is `private[sql]`). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Idempotently install an extra planner strategy on a live session
     * (the route for sessions built without `spark.sql.extensions`). */
   def installStrategy(spark: SparkSession, s: SparkStrategy): Unit = {

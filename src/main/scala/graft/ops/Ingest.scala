@@ -26,6 +26,32 @@ object Ingest {
       .option("mode", "PERMISSIVE")
       .load(glob)
 
+  /** Bytes of the files a scan of `glob` reads, counted in-process
+    * with `java.nio` (no Spark job) and stopped once they exceed `limit`;
+    * 0 when nothing matches. Each path component may use the glob syntax
+    * Spark's readers share with `java.nio` (`*`, `?`, `[..]`, `{a,b}`);
+    * a path without one counts the file, or the files under the
+    * directory. A path with a URI scheme (`s3a:`, `abfss:`, ...) is not
+    * counted here: it counts as `limit`. */
+  def globBytes(glob: String, limit: Long = Long.MaxValue): Long = {
+    import java.nio.file.{Files, FileSystems, Paths}
+    if (glob.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:.*")) return limit
+    val parts = glob.split("/", -1).toSeq
+    val fixed = parts.takeWhile(p => !p.exists("*?[{".contains(_)))
+    val pattern = parts.drop(fixed.length)
+    val root = Paths.get(if (fixed == Seq("")) "/" else fixed.mkString("/"))
+    if (!Files.exists(root)) return 0L
+    val matcher = FileSystems.getDefault.getPathMatcher("glob:" + pattern.mkString("/"))
+    val walk = Files.walk(root, if (pattern.isEmpty) Int.MaxValue else pattern.size)
+    try {
+      val files = walk.filter(p => Files.isRegularFile(p) &&
+        (pattern.isEmpty || matcher.matches(root.relativize(p)))).iterator
+      var bytes = 0L
+      while (bytes <= limit && files.hasNext) bytes += Files.size(files.next())
+      bytes
+    } finally walk.close()
+  }
+
   /** S3 — attach the hidden file-metadata path column.
     * Reference: `ds2b_company_house.py:63` (`_metadata.file_path`; Unity
     * Catalog forbids `input_file_name()` — same hidden column exists in

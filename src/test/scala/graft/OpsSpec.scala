@@ -49,6 +49,32 @@ class OpsSpec extends SparkSpec {
     assert(Ingest.cleanColumnNames(df).columns.toSeq == Seq("cust_key", "acct_bal_usd"))
   }
 
+  test("globBytes sums the files a glob matches, counts 0 for no match, stops past the limit") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft-glob")
+    def put(rel: String, n: Int): Unit = {
+      val p = root.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, new Array[Byte](n))
+    }
+    put("d=1/a/overview.json", 100)
+    put("d=2/b/overview.json", 200)
+    put("d=2/b/officers.json", 400)
+    put("csv/part0.csv", 10)
+    put("csv/part1.csv", 20)
+    assert(Ingest.globBytes(s"$root/*/*/overview.json") == 300)
+    assert(Ingest.globBytes(s"$root/*/*/{overview,officers}.json") == 700)
+    assert(Ingest.globBytes(s"$root/csv/*.csv") == 30)
+    assert(Ingest.globBytes(s"$root/csv") == 30)
+    assert(Ingest.globBytes(s"$root/*/*/missing.json") == 0)
+    assert(Ingest.globBytes(s"$root/nowhere/*.csv") == 0)
+    // the walk (in no set order) stops at the first file past the limit
+    assert(Set(100L, 200L, 400L).contains(Ingest.globBytes(s"$root/*/*/*.json", limit = 50)))
+    // a path with a URI scheme is not counted here: it counts as the limit
+    assert(Ingest.globBytes("s3a://bucket/raw/*.csv", limit = 7) == 7)
+    assert(Ingest.globBytes(s"file:$root/csv/*.csv", limit = 7) == 7)
+  }
+
   test("salted aggregate equals plain aggregate on skewed keys") {
     import graft.ops.Skew
     import graft.ops.Skew.AggSpec

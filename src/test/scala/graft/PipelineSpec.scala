@@ -33,8 +33,10 @@ class PipelineSpec extends SparkSpec {
        |  "has_insolvency_history": false
        |}""".stripMargin
 
-  test("full medallion pipeline: raw -> bronze -> silver -> gold, then incremental SCD2") {
-    val root = Files.createTempDirectory("graft-e2e")
+  /** The golden raw zone under `root`: the documented edge cases
+    * (FIXTURES.md) for every layer, as (bronze CH, bronze YF, silver,
+    * gold) confs. [[landGoldenDay]] lands its incremental day. */
+  private def goldenZone(root: Path): (BronzeConf, BronzeConf, SilverConf, GoldConf) = {
     val raw = root.resolve("raw")
     val ch = raw.resolve("companies_house")
 
@@ -88,7 +90,6 @@ class PipelineSpec extends SparkSpec {
         |,BET,2026-01-06,20.5,21.5,20.0,21.0,21.0,800,2026-01-07
         |""".stripMargin)
 
-    val cat = new TableCatalog(root.resolve("warehouse").toString)
     val bronzeCh = BronzeConf("companies", "bronze", ch.toString, "json", Seq(
       BronzeTableConf("overview", "overview.json"),
       BronzeTableConf("officers", "officers.json", explode = true, Some("items")),
@@ -111,6 +112,43 @@ class PipelineSpec extends SparkSpec {
         FactConf("fact_trading", "trading_data", "date", Seq("date")),
         FactConf("fact_fundamentals", "fundamentals_data", "quarter_end_date", Nil)))
 
+    (bronzeCh, bronzeYf, silverYf, goldConf)
+  }
+
+  /** The golden zone's incremental day: one changed close and one new
+    * trading day. */
+  private def landGoldenDay(root: Path): Unit =
+    write(root.resolve("raw/yfinance/trading_data/part0.csv"),
+      """company_number,ticker,date,open,high,low,close,adj_close,volume,ingestion_date
+        |00000001,ALP,2026-01-05,10.0,11.0,9.5,10.5,10.5,1000,2026-01-06
+        |00000001,ALP,2026-01-06,10.5,12.0,10.0,11.5,11.5,1500,2026-02-01
+        |00000001,ALP,2026-02-02,11.5,12.5,11.0,12.0,12.0,2000,2026-02-03
+        |""".stripMargin)
+
+  /** A table's rows as sorted text, column-name ordered. Two columns are
+    * volatile by contract and masked to a stable form: `file_path` embeds
+    * the test temp dir (the raw-zone-relative suffix is kept), and
+    * `last_updated_ts` is the reference's `current_timestamp()` audit
+    * column. */
+  private def canonical(df: org.apache.spark.sql.DataFrame): String = {
+    val cols = df.columns.sorted.toSeq
+    def mask(c: String, v: String): String = c match {
+      case "file_path" => v.replaceFirst(".*/raw/", "raw/")
+      case "last_updated_ts" => "<volatile-ts>"
+      case _ => v
+    }
+    val rows = df.select(cols.map(col): _*).collect().map { r =>
+      cols.indices.map(i =>
+        if (r.isNullAt(i)) "<null>" else mask(cols(i), r.get(i).toString))
+        .mkString("\u0001")
+    }.sorted
+    (cols.mkString("\u0001") +: rows.toSeq).mkString("\n") + "\n"
+  }
+
+  test("full medallion pipeline: raw -> bronze -> silver -> gold, then incremental SCD2") {
+    val root = Files.createTempDirectory("graft-e2e")
+    val (bronzeCh, bronzeYf, silverYf, goldConf) = goldenZone(root)
+    val cat = new TableCatalog(root.resolve("warehouse").toString)
     Pipeline.run(spark, bronzeCh, bronzeYf, silverYf, goldConf, cat,
       clock = Clock.fixed("2026-01-10"))
 
@@ -150,12 +188,7 @@ class PipelineSpec extends SparkSpec {
       .filter(col("is_current") === true).count() == 2)
 
     // -- incremental second run: one changed close + one new trading day --
-    write(yf.resolve("trading_data/part0.csv"),
-      """company_number,ticker,date,open,high,low,close,adj_close,volume,ingestion_date
-        |00000001,ALP,2026-01-05,10.0,11.0,9.5,10.5,10.5,1000,2026-01-06
-        |00000001,ALP,2026-01-06,10.5,12.0,10.0,11.5,11.5,1500,2026-02-01
-        |00000001,ALP,2026-02-02,11.5,12.5,11.0,12.0,12.0,2000,2026-02-03
-        |""".stripMargin)
+    landGoldenDay(root)
     Pipeline.run(spark, bronzeCh, bronzeYf, silverYf, goldConf, cat,
       clock = Clock.fixed("2026-02-05"))
 
@@ -185,24 +218,6 @@ class PipelineSpec extends SparkSpec {
     // property assertions above still hold. Regenerate deliberately with
     // GRAFT_REGEN_GOLDENS=1 after an INTENDED semantic change.
     val goldenDir = java.nio.file.Paths.get("src/test/resources/goldens")
-    def canonical(df: org.apache.spark.sql.DataFrame): String = {
-      val cols = df.columns.sorted.toSeq
-      // two columns are volatile BY CONTRACT, masked to a stable form:
-      // file_path embeds the test temp dir (keep the raw-zone-relative
-      // suffix); last_updated_ts is the reference's current_timestamp()
-      // audit column
-      def mask(c: String, v: String): String = c match {
-        case "file_path" => v.replaceFirst(".*/raw/", "raw/")
-        case "last_updated_ts" => "<volatile-ts>"
-        case _ => v
-      }
-      val rows = df.select(cols.map(col): _*).collect().map { r =>
-        cols.indices.map(i =>
-          if (r.isNullAt(i)) "<null>" else mask(cols(i), r.get(i).toString))
-          .mkString("\u0001")
-      }.sorted
-      (cols.mkString("\u0001") +: rows.toSeq).mkString("\n") + "\n"
-    }
     Seq("companies.silver.company_master", "companies.silver.trading_data",
         "companies.gold.fact_fundamentals", "companies.gold.fact_trading",
         "companies.gold.dim_company_details").foreach { t =>
@@ -219,6 +234,74 @@ class PipelineSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  test("a small run is interpreted: its day compiles few classes and publishes the codegen path's tables") {
+    import org.apache.spark.sql.graft.CodegenCount
+    val root = Files.createTempDirectory("graft-modes")
+    val (bronzeCh, bronzeYf, silverYf, goldConf) = goldenZone(root)
+    val interpreted = new TableCatalog(root.resolve("interpreted").toString)
+    val codegen = new TableCatalog(root.resolve("codegen").toString)
+    val conf = spark.conf.getAll
+    // one run per path over the same raw zone; returns the classes the
+    // interpreted run compiled
+    def runBoth(day: String): Long = {
+      val c0 = CodegenCount.compiled
+      Pipeline.run(spark, bronzeCh, bronzeYf, silverYf, goldConf, interpreted, Clock.fixed(day))
+      val compiled = CodegenCount.compiled - c0
+      Pipeline.runOn(spark, bronzeCh, bronzeYf, silverYf, goldConf, codegen, Clock.fixed(day))
+      compiled
+    }
+    val load = runBoth("2026-01-10")
+    landGoldenDay(root)
+    val day = runBoth("2026-02-05")
+    info(s"classes compiled by the interpreted load: $load, day: $day")
+    assert(day <= 10, s"the interpreted day compiled $day classes")
+    assert(spark.conf.getAll == conf, "a run changed the caller's conf")
+    val tables = interpreted.listTables()
+    assert(tables.size == 14 && tables == codegen.listTables(), tables)
+    tables.foreach { t =>
+      assert(canonical(interpreted.read(spark, t)) == canonical(codegen.read(spark, t)), t)
+    }
+  }
+
+  test("an entry point runs interpreted below the input bound and on the caller's session at it") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    import graft.core.Sessions
+    val root = Files.createTempDirectory("graft-bound")
+    val yf = root.resolve("raw/yfinance")
+    val header = "company_number,ticker,date,open,high,low,close,adj_close,volume,ingestion_date\n"
+    val row = "00000001,ALP,2026-01-05,10.0,11.0,9.5,10.5,10.5,1000,2026-01-06\n"
+    write(yf.resolve("trading_data/part0.csv"), header + row)
+    val conf = BronzeConf("companies", "bronze", yf.toString, "csv",
+      Seq(BronzeTableConf("trading_data", "trading_data/*.csv")))
+    val cat = new TableCatalog(root.resolve("warehouse").toString)
+    // whole-stage codegen nodes of every query the calls run; the
+    // caller's listeners reach a clone's queries too
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        stages.add(codegenStages(qe.executedPlan))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def bronze(): Seq[Int] = {
+      stages.clear()
+      Pipeline.bronzeYFinance(spark, conf, cat)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      stages.asScala.toSeq
+    }
+    val rows = (Sessions.interpretedBelowBytes / row.length + 1).toInt
+    spark.listenerManager.register(listener)
+    try {
+      val small = bronze()
+      assert(small.nonEmpty && small.forall(_ == 0), small)
+      write(yf.resolve("trading_data/part1.csv"), header + row * rows)
+      val large = bronze()
+      assert(large.exists(_ > 0), large)
+    } finally spark.listenerManager.unregister(listener)
+    assert(cat.read(spark, "companies.bronze.trading_data").count() == rows + 1L)
   }
 
   test("silver+gold publish atomically: a racing snapshot reader never sees a torn layer pair") {

@@ -10,19 +10,13 @@ import org.apache.spark.sql.functions._
   * `spark.sql.shuffle.partitions` constant — so a scaled-up input plans
   * more reducers without anyone re-tuning a global knob. Verified on
   * the shared local session by applying the conf block at runtime
-  * (every key is runtime-settable, which the test also proves). */
+  * (every key is runtime-settable, which the test also proves).
+  *
+  * Also pins the execution-mode choice ([[Sessions.forInput]]): below
+  * the bound an interpreted clone that differs from the caller in the
+  * two codegen keys only, at or above it the caller's session itself. */
 class SessionsSpec extends SparkSpec {
   import spark.implicits._
-
-  private def withConf[T](conf: Map[String, String])(body: => T): T = {
-    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   private def reducerCount(rows: Int): Int = {
     // high-cardinality keys + a ~100-byte payload: partial aggregation
@@ -51,7 +45,7 @@ class SessionsSpec extends SparkSpec {
       advisoryPartitionBytes = 1L << 20, oversubscription = 16)
     assert(conf("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "64")
     assert(conf("spark.sql.shuffle.partitions") == "8")
-    withConf(conf) {
+    withSQLConf(conf.toSeq: _*) {
       val n = reducerCount(400000)
       assert(n > 8, s"expected > shuffle.partitions=8 reducers, got $n")
       assert(n <= 64, s"ceiling is initialPartitionNum=64, got $n")
@@ -61,7 +55,7 @@ class SessionsSpec extends SparkSpec {
   test("clusterConf: bigger inputs plan more reducers under the same conf") {
     val conf = Sessions.clusterConf(totalCores = 4,
       advisoryPartitionBytes = 1L << 20, oversubscription = 16)
-    withConf(conf) {
+    withSQLConf(conf.toSeq: _*) {
       val small = reducerCount(40000)
       val big = reducerCount(400000)
       assert(big > small,
@@ -74,9 +68,43 @@ class SessionsSpec extends SparkSpec {
     // The flip side: with the production 128 MB advisory target, a tiny
     // shuffle collapses to ~1 reducer instead of paying 8 scheduled
     // tasks — empty buckets are free to oversubscribe.
-    withConf(Sessions.clusterConf(totalCores = 4)) {
+    withSQLConf(Sessions.clusterConf(totalCores = 4).toSeq: _*) {
       val n = reducerCount(20000)
       assert(n < 8, s"tiny shuffle should coalesce below shuffle.partitions, got $n")
     }
+  }
+
+  test("forInput below the bound: an interpreted clone; the caller's conf is untouched") {
+    graft.functions.GraftExtensions.register(spark)
+    withSQLConf("spark.sql.files.maxRecordsPerFile" -> "777") {
+      val before = spark.conf.getAll
+      val clone = Sessions.forInput(spark, Sessions.interpretedBelowBytes - 1)
+      assert(!(clone eq spark))
+      assert(clone.sparkContext eq spark.sparkContext)
+      // the caller's runtime key is inherited; only the two codegen keys differ
+      assert(clone.conf.get("spark.sql.files.maxRecordsPerFile") == "777")
+      val after = clone.conf.getAll
+      assert(after.filter { case (k, v) => !before.get(k).contains(v) } == Map(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+      assert(before.keySet.subsetOf(after.keySet))
+      // graft_* functions resolve on the clone, with the caller's result
+      val q = "SELECT graft_jaro_winkler('martha', 'marhta') AS s"
+      assert(clone.sql(q).head().getDouble(0) == spark.sql(q).head().getDouble(0))
+      // the clone's plans run without whole-stage codegen; the caller's with it
+      def stages(s: org.apache.spark.sql.SparkSession): Int = {
+        val df = s.range(100).selectExpr("id % 7 AS k").groupBy("k").count()
+        assert(df.collect().length == 7)
+        codegenStages(df.queryExecution.executedPlan)
+      }
+      assert(stages(clone) == 0)
+      assert(stages(spark) > 0)
+      assert(spark.conf.getAll == before)
+    }
+  }
+
+  test("forInput at or above the bound: the caller's session itself") {
+    assert(Sessions.forInput(spark, Sessions.interpretedBelowBytes) eq spark)
+    assert(Sessions.forInput(spark, Long.MaxValue) eq spark)
   }
 }

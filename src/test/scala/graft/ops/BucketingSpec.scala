@@ -53,13 +53,4 @@ class BucketingSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), plan)
     assert(agg.count() == 20)
   }
-
-  private def withSQLConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }

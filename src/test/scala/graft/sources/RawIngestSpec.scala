@@ -83,16 +83,17 @@ class RawIngestSpec extends SparkSpec {
       // basePath makes the globbed files share one discovery root; type
       // inference off keeps company_number a string ("02557590" would
       // otherwise coerce to 2557590, dropping the leading zeros)
-      spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      val df = spark.read
-        .option("basePath", s"$root/raw/companies_house")
-        .json(s"$root/raw/companies_house/ingestion_date=*/company_number=*/overview.json")
-      assert(df.count() == 2)
-      // partition columns materialize from the directory layout
-      assert(df.columns.toSet.contains("ingestion_date") && df.columns.toSet.contains("company_number"))
-      val row = df.filter(col("company_number") === "02557590").head()
-      assert(row.getAs[String]("company_name") == "Co 02557590")
-      assert(row.getAs[Any]("ingestion_date").toString == "2026-03-01")
+      withSQLConf("spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
+        val df = spark.read
+          .option("basePath", s"$root/raw/companies_house")
+          .json(s"$root/raw/companies_house/ingestion_date=*/company_number=*/overview.json")
+        assert(df.count() == 2)
+        // partition columns materialize from the directory layout
+        assert(df.columns.toSet.contains("ingestion_date") && df.columns.toSet.contains("company_number"))
+        val row = df.filter(col("company_number") === "02557590").head()
+        assert(row.getAs[String]("company_name") == "Co 02557590")
+        assert(row.getAs[Any]("ingestion_date").toString == "2026-03-01")
+      }
     }
   }
 }
