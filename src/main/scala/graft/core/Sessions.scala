@@ -38,35 +38,64 @@ object Sessions {
     spark
   }
 
-  /** Input bytes below which a pipeline call runs interpreted (see
-    * [[forInput]]). Set from a crossover of the medallion load and day,
-    * interpreted against codegen, on a 4-core host (SURVEY.md §7.4):
-    * interpreted won every pair up to 1.0 MB of input, and codegen first
-    * tied a pair at 2.6 MB. The bound sits between the two. */
+  /** Input bytes below which a pipeline call runs in the small-input
+    * mode, interpreted and one task wide (see [[forInput]]). Set from a
+    * crossover of the medallion load and day, interpreted against
+    * codegen, on a 4-core host (SURVEY.md §7.4): interpreted won every
+    * pair up to 1.0 MB of input, and codegen first tied a pair at
+    * 2.6 MB. The bound sits between the two. */
   val interpretedBelowBytes: Long = 2L << 20
+
+  /** The keys the small-input clone ([[forInput]]) sets, and why.
+    *
+    * Interpreted: whole-stage codegen off and the expression factories
+    * on their interpreted implementations (`factoryMode=NO_CODEGEN`, the
+    * internal key Spark's own interpreted-plan tests use). On a small
+    * batch, compiling a plan costs more than running it: a medallion day
+    * over the benchmark's raw zone compiled about 140 classes with
+    * Janino, and interpreted it took half the task-seconds. Turning off
+    * only whole-stage codegen is not enough, since each expression then
+    * compiles on its own.
+    *
+    * One task wide: below the bound Spark's own byte sizing would give
+    * every scan and shuffle one partition (the advisory partition size
+    * is 64 MB, the split size 128 MB), but the core-count defaults split
+    * them `cores` ways, and each extra task only adds launch, shuffle
+    * file, Parquet writer and commit costs. So each scan reads as one
+    * split (`minPartitionNum=1`, and `maxPartitionBytes` unbounded so
+    * that the 4 MB open cost Spark charges per file cannot start a
+    * second split past 32 files), each shuffle writes one partition
+    * (`shuffle.partitions`, and AQE's `initialPartitionNum`, which a
+    * caller built with [[clusterConf]] sets and which would otherwise
+    * win), and input files are listed on the driver, never by a
+    * distributed listing job with a task per file (the discovery
+    * threshold). A medallion day over the benchmark's raw zone runs 45
+    * tasks in 36 stages instead of 96: one task per stage, except that a
+    * union runs one per branch (SCD2's merge unions four). */
+  val smallInputConf: Map[String, String] = Map(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "1",
+    "spark.sql.files.minPartitionNum" -> "1",
+    "spark.sql.files.maxPartitionBytes" -> Long.MaxValue.toString,
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString)
 
   /** The session a pipeline call of `inputBytes` input runs on.
     *
     * At or above [[interpretedBelowBytes]] it is `spark` itself. Below
-    * it, it is an interpreted clone of `spark`: whole-stage codegen off
-    * and the expression factories on their interpreted implementations
-    * (`factoryMode=NO_CODEGEN`, the internal key Spark's own
-    * interpreted-plan tests use). On a small batch, compiling a plan
-    * costs more than running it: a medallion day over the benchmark's
-    * raw zone compiled about 140 classes with Janino, and interpreted it
-    * took half the task-seconds. Turning off only whole-stage codegen is
-    * not enough, since each expression then compiles on its own.
+    * it, it is the small-input clone of `spark`: interpreted and one
+    * task wide, the keys of [[smallInputConf]].
     *
-    * A clone, not `spark` with two keys set, because the caller's conf
+    * A clone, not `spark` with those keys set, because the caller's conf
     * must not change under it: the clone keeps the caller's runtime
     * conf, listeners, extensions and `graft_*` functions, and differs
-    * from it only in the two keys. */
+    * from it only in those keys. */
   def forInput(spark: SparkSession, inputBytes: Long): SparkSession =
     if (inputBytes >= interpretedBelowBytes) spark
     else {
       val clone = org.apache.spark.sql.graft.Bridge.cloneSession(spark)
-      clone.conf.set("spark.sql.codegen.wholeStage", "false")
-      clone.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      smallInputConf.foreach { case (k, v) => clone.conf.set(k, v) }
       clone
     }
 

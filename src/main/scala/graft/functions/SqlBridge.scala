@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into `private[sql]` helpers so graft's native Expressions and
   * LogicalPlans can be exposed through the public Column/DataFrame API.
@@ -31,6 +33,20 @@ object Bridge {
     * `spark` untouched (`cloneSession` is `private[sql]`). */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** A DataFrame over `files` in `format`, resolved as
+    * `DataFrameReader.load` resolves them but without its existence
+    * check, for files the caller has just listed. That check runs on a
+    * fresh thread pool per read, which costs more than the listing
+    * itself on a small input. A file deleted after the listing fails the
+    * scan when it runs. */
+  def readListed(spark: SparkSession, format: String, schema: StructType,
+      options: Map[String, String], files: Seq[String]): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.baseRelationToDataFrame(DataSource(s, className = format, paths = files,
+      userSpecifiedSchema = Some(schema), options = options)
+      .resolveRelation(checkFilesExist = false))
+  }
 
   /** Idempotently install an extra planner strategy on a live session
     * (the route for sessions built without `spark.sql.extensions`). */

@@ -17,12 +17,17 @@ import org.apache.spark.sql.functions._
   * Execution mode: each entry point picks its session once, from the
   * size of its own input, and runs every frame, staged read and lane of
   * the call on it. The input is what exists when the call starts: the
-  * raw files its bronze globs match ([[Ingest.globBytes]]) plus the
-  * current versions of the catalog tables it reads or merges into
-  * ([[TableCatalog.currentBytes]]), counted without a Spark job and only
-  * up to the bound. Below [[Sessions.interpretedBelowBytes]] the call
-  * runs on an interpreted clone of the caller's session, which compiles
-  * no generated code; otherwise on the caller's session, unchanged (see
+  * raw files its bronze globs match (each glob expanded once into an
+  * [[Ingest.Input]], whose file list the bronze read is then given)
+  * plus the current versions of the catalog tables it reads or merges
+  * into ([[TableCatalog.currentBytes]]), counted without a Spark job and
+  * only up to the bound. Below [[Sessions.interpretedBelowBytes]] the
+  * call runs on the small-input clone of the caller's session: it
+  * compiles no generated code, reads each scan as one split, shuffles
+  * into one partition and lists files on the driver, so a medallion day
+  * over the benchmark's raw zone runs one task per stage (a union one
+  * per branch). Otherwise the
+  * call runs on the caller's session, unchanged (see
   * [[Sessions.forInput]]). The caller's session conf is never set.
   */
 object Pipeline {
@@ -31,23 +36,21 @@ object Pipeline {
     * (`medallion/bronze/ds2b_company_house.py:17-101`), one table per
     * [[Lanes]] job, each with its own commit. */
   def bronzeCompanyHouse(spark: SparkSession, conf: BronzeConf, cat: TableCatalog): Unit = {
-    val s = sessionFor(spark, cat, companyHouseGlobs(conf), Nil)
-    Lanes.run(s, bronzeCompanyHouseJobs(s, conf, cat))
+    val in = companyHouseInputs(conf)
+    val s = sessionFor(spark, cat, in, Nil)
+    Lanes.run(s, bronzeCompanyHouseJobs(s, conf, in, cat))
   }
 
-  private def companyHouseGlob(conf: BronzeConf, t: BronzeTableConf): String =
-    s"${conf.basePath}/*/*/${t.file}"
-
-  private def companyHouseGlobs(conf: BronzeConf): Seq[String] =
-    conf.tables.map(companyHouseGlob(conf, _))
+  /** Each table's input, expanded once for sizing and the read. */
+  private def companyHouseInputs(conf: BronzeConf): Seq[Ingest.Input] =
+    conf.tables.map(t => Ingest.Input(s"${conf.basePath}/*/*/${t.file}"))
 
   private def bronzeCompanyHouseJobs(spark: SparkSession, conf: BronzeConf,
-      cat: TableCatalog): Seq[(String, () => Unit)] =
-    conf.tables.map { t =>
+      inputs: Seq[Ingest.Input], cat: TableCatalog): Seq[(String, () => Unit)] =
+    conf.tables.zip(inputs).map { case (t, in) =>
       val name = s"${conf.catalog}.${conf.schema}.${t.name}"
       name -> { () =>
-        var df = Ingest.json(spark, SchemaRegistry.companiesHouse(t.name),
-          companyHouseGlob(conf, t))
+        var df = Ingest.json(spark, SchemaRegistry.companiesHouse(t.name), in)
         df = Ingest.withPathIdentity(Ingest.withFilePath(df))
         if (t.explode) {
           val arrayCol = t.explodeColumn.getOrElse("items")
@@ -62,22 +65,21 @@ object Pipeline {
     * (`medallion/bronze/ds2b_yfinance.py:17-78`), one table per
     * [[Lanes]] job, each with its own commit. */
   def bronzeYFinance(spark: SparkSession, conf: BronzeConf, cat: TableCatalog): Unit = {
-    val s = sessionFor(spark, cat, yFinanceGlobs(conf), Nil)
-    Lanes.run(s, bronzeYFinanceJobs(s, conf, cat))
+    val in = yFinanceInputs(conf)
+    val s = sessionFor(spark, cat, in, Nil)
+    Lanes.run(s, bronzeYFinanceJobs(s, conf, in, cat))
   }
 
-  private def yFinanceGlob(conf: BronzeConf, t: BronzeTableConf): String =
-    s"${conf.basePath}/${t.file}"
-
-  private def yFinanceGlobs(conf: BronzeConf): Seq[String] =
-    conf.tables.map(yFinanceGlob(conf, _))
+  /** Each table's input, expanded once for sizing and the read. */
+  private def yFinanceInputs(conf: BronzeConf): Seq[Ingest.Input] =
+    conf.tables.map(t => Ingest.Input(s"${conf.basePath}/${t.file}"))
 
   private def bronzeYFinanceJobs(spark: SparkSession, conf: BronzeConf,
-      cat: TableCatalog): Seq[(String, () => Unit)] =
-    conf.tables.map { t =>
+      inputs: Seq[Ingest.Input], cat: TableCatalog): Seq[(String, () => Unit)] =
+    conf.tables.zip(inputs).map { case (t, in) =>
       val name = s"${conf.catalog}.${conf.schema}.${t.name}"
       name -> { () =>
-        var df = Ingest.csv(spark, SchemaRegistry.yfinance(t.name), yFinanceGlob(conf, t))
+        var df = Ingest.csv(spark, SchemaRegistry.yfinance(t.name), in)
         df = Ingest.withFilePath(df)
         df = Ingest.cleanColumnNames(Ingest.withAudit(df))
         cat.overwrite(df, name)
@@ -207,34 +209,45 @@ object Pipeline {
   def run(spark: SparkSession,
       bronzeCh: BronzeConf, bronzeYf: BronzeConf,
       silverYf: SilverConf, goldConf: GoldConf,
-      cat: TableCatalog, clock: Clock = Clock.Wall): Unit =
-    runOn(sessionFor(spark, cat, companyHouseGlobs(bronzeCh) ++ yFinanceGlobs(bronzeYf),
-        companyMasterInputs(bronzeCh.catalog) ++ scd2Inputs(silverYf) ++ goldInputs(goldConf)),
-      bronzeCh, bronzeYf, silverYf, goldConf, cat, clock)
+      cat: TableCatalog, clock: Clock = Clock.Wall): Unit = {
+    val ch = companyHouseInputs(bronzeCh)
+    val yf = yFinanceInputs(bronzeYf)
+    val s = sessionFor(spark, cat, ch ++ yf,
+      companyMasterInputs(bronzeCh.catalog) ++ scd2Inputs(silverYf) ++ goldInputs(goldConf))
+    runWith(s, ch, yf, bronzeCh, bronzeYf, silverYf, goldConf, cat, clock)
+  }
 
   /** [[run]] on `session` as given, whatever the input size: with the
-    * caller's own session it is the codegen path, which a differential
-    * spec compares against the interpreted one. */
+    * caller's own session it is the codegen, `cores`-wide path, which a
+    * differential spec compares against the small-input one. */
   private[graft] def runOn(session: SparkSession,
       bronzeCh: BronzeConf, bronzeYf: BronzeConf,
       silverYf: SilverConf, goldConf: GoldConf,
+      cat: TableCatalog, clock: Clock): Unit =
+    runWith(session, companyHouseInputs(bronzeCh), yFinanceInputs(bronzeYf),
+      bronzeCh, bronzeYf, silverYf, goldConf, cat, clock)
+
+  /** [[runOn]] with the bronze inputs already expanded. */
+  private def runWith(session: SparkSession, ch: Seq[Ingest.Input], yf: Seq[Ingest.Input],
+      bronzeCh: BronzeConf, bronzeYf: BronzeConf,
+      silverYf: SilverConf, goldConf: GoldConf,
       cat: TableCatalog, clock: Clock): Unit = {
-    Lanes.run(session, bronzeCompanyHouseJobs(session, bronzeCh, cat) ++
-      bronzeYFinanceJobs(session, bronzeYf, cat))
+    Lanes.run(session, bronzeCompanyHouseJobs(session, bronzeCh, ch, cat) ++
+      bronzeYFinanceJobs(session, bronzeYf, yf, cat))
     cat.publishAtomicChained(session,
       silverCompanyMasterBatch(bronzeCh.catalog, clock) +:
         (silverScd2Batches(session, silverYf, cat, clock) ++ goldBatches(goldConf)))
   }
 
-  /** The session a call whose bronze scans read `globs` and whose
+  /** The session a call whose bronze scans read `inputs` and whose
     * silver or gold layers read or merge into catalog `tables` runs on:
     * their bytes, counted up to [[Sessions.interpretedBelowBytes]], pick
     * it through [[Sessions.forInput]]. */
-  private def sessionFor(spark: SparkSession, cat: TableCatalog, globs: Seq[String],
+  private def sessionFor(spark: SparkSession, cat: TableCatalog, inputs: Seq[Ingest.Input],
       tables: Seq[String]): SparkSession = {
     val bound = Sessions.interpretedBelowBytes
     var bytes = 0L
-    for (g <- globs if bytes < bound) bytes += Ingest.globBytes(g, bound - bytes)
+    for (in <- inputs if bytes < bound) bytes += in.bytes(bound - bytes)
     for (t <- tables.distinct if bytes < bound) bytes += cat.currentBytes(t, bound - bytes)
     Sessions.forInput(spark, bytes)
   }

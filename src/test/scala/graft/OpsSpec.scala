@@ -49,7 +49,7 @@ class OpsSpec extends SparkSpec {
     assert(Ingest.cleanColumnNames(df).columns.toSeq == Seq("cust_key", "acct_bal_usd"))
   }
 
-  test("globBytes sums the files a glob matches, counts 0 for no match, stops past the limit") {
+  test("Input.bytes sums a glob's files, counts 0 for no match, stops past the limit") {
     import java.nio.file.Files
     val root = Files.createTempDirectory("graft-glob")
     def put(rel: String, n: Int): Unit = {
@@ -57,22 +57,81 @@ class OpsSpec extends SparkSpec {
       Files.createDirectories(p.getParent)
       Files.write(p, new Array[Byte](n))
     }
+    def bytes(glob: String, limit: Long = Long.MaxValue) = Ingest.Input(glob).bytes(limit)
     put("d=1/a/overview.json", 100)
     put("d=2/b/overview.json", 200)
     put("d=2/b/officers.json", 400)
     put("csv/part0.csv", 10)
     put("csv/part1.csv", 20)
-    assert(Ingest.globBytes(s"$root/*/*/overview.json") == 300)
-    assert(Ingest.globBytes(s"$root/*/*/{overview,officers}.json") == 700)
-    assert(Ingest.globBytes(s"$root/csv/*.csv") == 30)
-    assert(Ingest.globBytes(s"$root/csv") == 30)
-    assert(Ingest.globBytes(s"$root/*/*/missing.json") == 0)
-    assert(Ingest.globBytes(s"$root/nowhere/*.csv") == 0)
-    // the walk (in no set order) stops at the first file past the limit
-    assert(Set(100L, 200L, 400L).contains(Ingest.globBytes(s"$root/*/*/*.json", limit = 50)))
-    // a path with a URI scheme is not counted here: it counts as the limit
-    assert(Ingest.globBytes("s3a://bucket/raw/*.csv", limit = 7) == 7)
-    assert(Ingest.globBytes(s"file:$root/csv/*.csv", limit = 7) == 7)
+    assert(bytes(s"$root/*/*/overview.json") == 300)
+    assert(bytes(s"$root/*/*/{overview,officers}.json") == 700)
+    assert(bytes(s"$root/csv/*.csv") == 30)
+    assert(bytes(s"$root/csv") == 30)
+    assert(bytes(s"$root/*/*/missing.json") == 0)
+    assert(bytes(s"$root/nowhere/*.csv") == 0)
+    // the sum stops at the first file past the limit
+    assert(Set(100L, 200L, 400L).contains(bytes(s"$root/*/*/*.json", limit = 50)))
+    // a path with a URI scheme, or a glob matching a directory, is left
+    // to Spark: it counts as the limit
+    assert(bytes("s3a://bucket/raw/*.csv", limit = 7) == 7)
+    assert(bytes(s"file:$root/csv/*.csv", limit = 7) == 7)
+    assert(bytes(s"$root/d=*/*", limit = 7) == 7)
+  }
+
+  test("a bronze read is given the files its glob matches: Spark's rows and inputFiles, no metadata probe") {
+    import java.nio.file.Files
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.types.{StringType, StructType}
+    val root = Files.createTempDirectory("graft-input")
+    for ((d, c) <- Seq("d=1/a" -> "A", "d=1/b" -> "B", "d=2/a" -> "C")) {
+      val p = root.resolve(s"$d/overview.json")
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, s"""{\n  "company_number": "$c"\n}""")
+    }
+    Files.writeString(root.resolve("part0.csv"), "k,v\n1,x\n2,y\n")
+    val schema = new StructType().add("company_number", StringType)
+    val glob = s"$root/*/*/overview.json"
+    val in = Ingest.Input(glob)
+    assert(in.listed.map(_.size).contains(3), in.listed)
+
+    // WARNs Spark's streaming-sink metadata probe logs
+    val sink = LogManager.getLogger(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink").asInstanceOf[Logger]
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("graft-sink-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    sink.addAppender(appender)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("company_number"), col("_metadata.file_path")).collect().map(_.toString).sorted.toSeq
+    try {
+      val spark0 = spark.read.schema(schema).option("multiLine", "true").json(glob)
+      assert(warns.size > 0, "Spark's own glob read no longer probes the glob path")
+      warns.clear()
+      val ours = Ingest.json(spark, schema, in)
+      assert(rows(ours) == rows(spark0))
+      assert(ours.inputFiles.toSeq.sorted == spark0.inputFiles.toSeq.sorted)
+      val csvGlob = s"$root/*.csv"
+      val csvSchema = new StructType().add("k", StringType).add("v", StringType)
+      val csv0 = spark.read.format("csv").schema(csvSchema).option("header", "true").load(csvGlob)
+      warns.clear()
+      val csv = Ingest.csv(spark, csvSchema, csvGlob)
+      assert(csv.collect().map(_.toString).sorted.toSeq == csv0.collect().map(_.toString).sorted.toSeq)
+      assert(csv.inputFiles.toSeq == csv0.inputFiles.toSeq)
+      assert(warns.isEmpty, warns)
+    } finally {
+      sink.removeAppender(appender)
+      appender.stop()
+    }
+    // a glob that matches nothing goes to Spark unchanged, with its error
+    val none = Ingest.Input(s"$root/*/*/missing.json")
+    assert(none.listed.isEmpty)
+    val e = intercept[org.apache.spark.sql.AnalysisException](Ingest.json(spark, schema, none))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
   }
 
   test("salted aggregate equals plain aggregate on skewed keys") {

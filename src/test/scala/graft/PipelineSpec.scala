@@ -265,6 +265,64 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("a small run is one task wide: 1 task per stage and no listing job, against a cores-wide caller") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft-tasks")
+    val (bronzeCh, bronzeYf, silverYf, goldConf) = goldenZone(root)
+    // 33 more overview files: the overview glob matches more than the 32
+    // root paths Spark lists on the driver by default
+    (100 until 133).foreach { i =>
+      val n = f"$i%08d"
+      write(root.resolve(s"raw/companies_house/ingestion_date=2026-01-01/$n/overview.json"),
+        overviewJson(s"Company $i", n, "active", "2001-01-01"))
+    }
+    // (tasks, reads a union) per stage: a union's stage runs one task per
+    // branch (SCD2's merge unions four), each branch one partition
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean)]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        tasks.add(e.stageInfo.numTasks -> e.stageInfo.rddInfos.exists(_.name == "UnionRDD"))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    // tasks per stage and listing jobs of one call
+    def counted(body: => Unit): (Seq[(Int, Boolean)], Int) = {
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      tasks.clear(); jobs.clear()
+      body
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      (tasks.asScala.toSeq, jobs.asScala.count(_.startsWith("Listing leaf files")))
+    }
+    val small = new TableCatalog(root.resolve("small").toString)
+    val wide = new TableCatalog(root.resolve("wide").toString)
+    def run(cat: TableCatalog, day: String) =
+      Pipeline.run(spark, bronzeCh, bronzeYf, silverYf, goldConf, cat, Clock.fixed(day))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (load, loadListed) = counted(run(small, "2026-01-10"))
+      val (wideLoad, wideListed) = counted(Pipeline.runOn(spark, bronzeCh, bronzeYf,
+        silverYf, goldConf, wide, Clock.fixed("2026-01-10")))
+      landGoldenDay(root)
+      val (day, dayListed) = counted(run(small, "2026-02-05"))
+      def sum(s: Seq[(Int, Boolean)]) = s.map(_._1).sum
+      info(s"small-input load: ${load.size} stages, ${sum(load)} tasks; " +
+        s"day: ${day.size} stages, ${sum(day)} tasks; caller's load: ${wideLoad.size} " +
+        s"stages, ${sum(wideLoad)} tasks")
+      def oneWide(s: Seq[(Int, Boolean)]) = s.nonEmpty && s.forall {
+        case (n, union) => n == 1 || union && n <= 4
+      }
+      assert(oneWide(load), load)
+      assert(oneWide(day), day)
+      assert(loadListed == 0 && dayListed == 0, (loadListed, dayListed))
+      assert(wideLoad.exists { case (n, union) => n > 1 && !union }, wideLoad)
+      assert(wideListed > 0, "the caller's session no longer lists > 32 files with a job")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(small.listTables() == wide.listTables())
+  }
+
   test("an entry point runs interpreted below the input bound and on the caller's session at it") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * (every key is runtime-settable, which the test also proves).
   *
   * Also pins the execution-mode choice ([[Sessions.forInput]]): below
-  * the bound an interpreted clone that differs from the caller in the
-  * two codegen keys only, at or above it the caller's session itself. */
+  * the bound a clone that differs from the caller in exactly the keys of
+  * [[Sessions.smallInputConf]] (interpreted, one task wide), at or above
+  * it the caller's session itself. */
 class SessionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -81,12 +82,16 @@ class SessionsSpec extends SparkSpec {
       val clone = Sessions.forInput(spark, Sessions.interpretedBelowBytes - 1)
       assert(!(clone eq spark))
       assert(clone.sparkContext eq spark.sparkContext)
-      // the caller's runtime key is inherited; only the two codegen keys differ
+      // the caller's runtime key is inherited; only the small-input keys differ
       assert(clone.conf.get("spark.sql.files.maxRecordsPerFile") == "777")
       val after = clone.conf.getAll
-      assert(after.filter { case (k, v) => !before.get(k).contains(v) } == Map(
-        "spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+      assert(after.filter { case (k, v) => !before.get(k).contains(v) } == Sessions.smallInputConf)
+      assert(Sessions.smallInputConf.keySet == Set(
+        "spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        "spark.sql.files.minPartitionNum", "spark.sql.files.maxPartitionBytes",
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"))
       assert(before.keySet.subsetOf(after.keySet))
       // graft_* functions resolve on the clone, with the caller's result
       val q = "SELECT graft_jaro_winkler('martha', 'marhta') AS s"
@@ -101,6 +106,62 @@ class SessionsSpec extends SparkSpec {
       assert(stages(spark) > 0)
       assert(spark.conf.getAll == before)
     }
+  }
+
+  test("forInput below the bound: a caller built with clusterConf still gets a one-partition clone") {
+    withSQLConf(Sessions.clusterConf(totalCores = 4).toSeq: _*) {
+      val before = spark.conf.getAll
+      assert(before("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "32")
+      val clone = Sessions.forInput(spark, 0L)
+      // the same shuffle: one reducer on the clone, more on the caller
+      // (a 1 MB advisory size over ~10 MB of incompressible rows)
+      def reducers(s: org.apache.spark.sql.SparkSession): Int = {
+        val df = s.range(400000L)
+          .select((col("id") % 100000).as("k"),
+            concat(md5(col("id").cast("string")), md5((col("id") + 1).cast("string"))).as("v"))
+          .repartition(col("k"))
+        df.write.mode("overwrite").format("noop").save()
+        df.rdd.getNumPartitions
+      }
+      withSQLConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (1L << 20).toString) {
+        val c = Sessions.forInput(spark, 0L)
+        assert(reducers(c) == 1)
+        assert(reducers(spark) > 1)
+      }
+      assert(clone.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "1")
+      assert(clone.conf.get("spark.sql.shuffle.partitions") == "1")
+      assert(spark.conf.getAll == before)
+    }
+  }
+
+  test("forInput below the bound: a scan of many small files is one split, listed on the driver") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft-splits")
+    // 40 files matched by a glob: more than the 32 root paths Spark
+    // lists on the driver by default
+    spark.range(0, 40, 1, 40).write.mode("overwrite").parquet(dir.toString)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def listingJobs(s: org.apache.spark.sql.SparkSession): (Int, Int) = {
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      jobs.clear()
+      // a given schema: no footer-reading job beside the listing
+      val df = s.read.schema("id LONG").parquet(s"$dir/*.parquet")
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      val n = jobs.toArray.count(_.toString.startsWith("Listing leaf files"))
+      (df.rdd.getNumPartitions, n)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (splits, listed) = listingJobs(Sessions.forInput(spark, 0L))
+      assert(splits == 1 && listed == 0, (splits, listed))
+      val (callerSplits, callerListed) = listingJobs(spark)
+      assert(callerSplits > 1 && callerListed == 1, (callerSplits, callerListed))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("forInput at or above the bound: the caller's session itself") {
